@@ -21,7 +21,7 @@ import graft.text.SimpleTokenizer
   * word order matters) is hashed with splitmix64 into 3 (dimension, sign)
   * pairs; contributions accumulate and the result is L2-normalized.
   * Pure JVM arithmetic — safe inside whole-stage codegen / mapPartitions,
-  * no per-call allocation beyond the output array.
+  * no per-token allocation.
   */
 object Embedder extends EmbeddingModel {
 
@@ -46,60 +46,25 @@ object Embedder extends EmbeddingModel {
 
   /** Embed one text (already prefixed by the caller).
     *
-    * Single allocation-free scan: subword char ranges are hashed in place
-    * — byte-identical to hashing SimpleTokenizer.encode's whitespace-
-    * trimmed token strings (EmbedderProps asserts the equivalence), at a
-    * fraction of the cost. This is the per-row hot loop of the 100-TB
-    * embed pass, so it must not allocate per token.
+    * Hashes the char ranges of [[SimpleTokenizer.Cursor]], the tokenizer's
+    * one token-boundary scan, in place: no per-token allocation in the
+    * per-row hot loop of the embed pass.
     */
-  def embed(text0: String): Array[Float] = {
-    val text = if (text0 == null) "" else text0
+  def embed(text: String): Array[Float] = {
     val vec = new Array[Float](Dim)
+    val tok = new SimpleTokenizer.Cursor(text)
     var prev = 0L
     var first = true
-    @inline def feed(h: Long): Unit = {
+    while (tok.next()) {
+      val h = hashRange(text, tok.start, tok.end)
       addFeature(vec, h)
       if (!first) addFeature(vec, mix64(prev) ^ h) // order-sensitive bigram
       first = false
       prev = h
     }
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      while (i < n && SimpleTokenizer.isWs(text.charAt(i))) i += 1
-      if (i < n) {
-        if (SimpleTokenizer.isWordChar(text.charAt(i))) {
-          val wStart = i
-          while (i < n && SimpleTokenizer.isWordChar(text.charAt(i))) i += 1
-          var j = wStart
-          while (j < i) {
-            val k = math.min(j + SimpleTokenizer.SubwordLen, i)
-            feed(hashRange(text, j, k))
-            j = k
-          }
-        } else {
-          feed(hashRange(text, i, i + 1))
-          i += 1
-        }
-      }
-    }
     l2Normalize(vec)
     vec
   }
-
-  /** Batched variant mirroring the reference's `model.encode(sentences,
-    * batch_size=processing_batch_size)` call shape
-    * (embedding_service.py:207-213). On a GPU-backed kernel this is where
-    * device micro-batching would live; here it is a simple map.
-    */
-  override def embedBatch(texts: Seq[String]): Seq[Array[Float]] =
-    texts.map(embed)
-
-  /** Query embedding: prepend the query task prefix then embed
-    * (embedding_service.py:159-164).
-    */
-  override def embedQuery(text: String): Array[Float] =
-    embed(graft.text.Chunker.QueryLead + text)
 
   private def l2Normalize(vec: Array[Float]): Unit = {
     var ss = 0.0

@@ -42,10 +42,11 @@ final case class EmbeddedChunk(
   *     crosses the network. The reference's positional-zip reassembly
   *     (embedding_service.py:220-257) disappears entirely.
   *   - [[embedDocumentsExploded]] produces the long-format chunk table for
-  *     downstream relational use; it is equally narrow (posexplode is
-  *     pipelined) — any groupBy a consumer adds is their shuffle, keyed on
-  *     doc_id with bounded rows per key (max_text_length caps a doc at
-  *     ~5k chunks, SURVEY.md §4).
+  *     downstream relational use as a narrow `flatMap` over the flagship's
+  *     output — the same chunk-and-embed kernel, no second plan. Any
+  *     groupBy a consumer adds is their shuffle, keyed on doc_id with
+  *     bounded rows per key (max_text_length caps a doc at ~5k chunks,
+  *     SURVEY.md §4).
   *   - Per-doc work is bounded by `maxTextLength`, so task skew is capped;
   *     documents are hash-distributed across partitions by the scan.
   */
@@ -225,36 +226,19 @@ class InceptionEngine(
 
   /** Long-format embedding table `(doc_id, chunk_number, chunk, embedding)`
     * with the lead prefix stripped from `chunk` (embedding_service.py:221-223)
-    * but INCLUDED in the embedded text (ibid:90). Batched inference inside
-    * `mapPartitions` mirrors `model.encode(batch_size=processing_batch_size)`
-    * (embedding_service.py:207-213) — the standard Spark distributed-
-    * inference shape; still a narrow, shuffle-free plan.
+    * but INCLUDED in the embedded text (ibid:90): [[embedDocuments]]'
+    * per-document rows flattened, one row per chunk. A narrow `flatMap`
+    * over the flagship kernel — still a shuffle-free plan.
     */
   def embedDocumentsExploded(
       df: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"
   ): Dataset[EmbeddedChunk] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val batchSize = conf.processingBatchSize
-    val valid = withValidation(df, textCol).filter(col("error_type").isNull)
-    val chunks = chunkDocuments(valid, idCol, textCol)
-      .as[(Long, Int, String)]
-    countRequest("batch")
-    val chunkAcc = metrics.map(_.chunkCount("text"))
-    val timeHist = metrics.map(_.processingTimeHistogram("batch"))
-    val mdl = model
-    chunks.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        chunkAcc.foreach(_.add(batch.size.toLong))
-        val t0 = System.nanoTime()
-        val vecs = mdl.embedBatch(batch.map(_._3))
-        timeHist.foreach(_.observe((System.nanoTime() - t0) / 1000000L))
-        batch.lazyZip(vecs).map { case ((id, n, chunk), v) =>
-          EmbeddedChunk(id, n, chunk.replace(Chunker.LeadText, ""), v)
-        }
-      }
+    import df.sparkSession.implicits._
+    embedDocuments(df, idCol, textCol).flatMap { d =>
+      d.embeddings.map(e =>
+        EmbeddedChunk(d.doc_id, e.chunk_number, e.chunk, e.embedding))
     }
   }
 

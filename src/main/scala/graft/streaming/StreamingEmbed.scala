@@ -14,10 +14,11 @@ import graft.engine.InceptionEngine
   */
 object StreamingEmbed {
 
-  /** Stream-embed documents: the SAME narrow transforms as
-    * InceptionEngine.embedDocumentsExploded — chunk + embed are stateless,
-    * so append mode needs no watermark or state store. Works on any
-    * streaming DataFrame with (doc_id, text).
+  /** Stream-embed documents into the long-format chunk table via
+    * InceptionEngine.embedDocumentsExploded, i.e. the flagship
+    * embedDocuments kernel flattened to one row per chunk. Chunk + embed
+    * are stateless, so append mode needs no watermark or state store.
+    * Works on any streaming DataFrame with (doc_id, text).
     */
   def embedStream(engine: InceptionEngine, stream: DataFrame): DataFrame =
     engine.embedDocumentsExploded(stream).toDF()

@@ -14,20 +14,21 @@ package graft.text
   *     with NO overlap (lines 100-113);
   *   - overflow when appending: flush, then carry the last
   *     `numOverlapSentences` sentences into the next chunk — unless
-  *     lead + re-encoded overlap + sentence would itself overflow, in which
-  *     case start clean (lines 116-141). Note the reference re-encodes the
-  *     overlap sentences joined with " " (lines 124-126); we do the same
-  *     (our token counts are additive so this is also exact);
+  *     lead + overlap + sentence would itself overflow, in which case
+  *     start clean (lines 116-141). The reference re-encodes the overlap
+  *     sentences joined with " " (lines 124-126); token counts are
+  *     additive, so summing the carried sentences' counts is exact;
   *   - final partial chunk is emitted (lines 147-149);
   *   - every chunk is `lead + sentences.mkString(" ")` where each sentence
-  *     is decode(encode(sentence)) (lines 103,122,144,149).
+  *     is decode(encode(sentence)) (lines 103,122,144,149), i.e. its
+  *     `SimpleTokenizer.truncate` to its own token count.
   */
 object Chunker {
 
   val LeadText = "search_document: "
   val QueryLead = "search_query: "
 
-  /** Tokenized-sentence greedy packing. Returns full chunk strings
+  /** Token-counted greedy packing. Returns full chunk strings
     * (lead-prefixed).
     */
   def splitSentences(
@@ -36,39 +37,39 @@ object Chunker {
       numOverlapSentences: Int
   ): Vector[String] = {
     val leadLen = SimpleTokenizer.countTokens(LeadText, addSpecialTokens = true)
+    val budget = maxTokens - leadLen
+    val keep = math.max(0, numOverlapSentences)
     val chunks = Vector.newBuilder[String]
-    // current chunk as decoded sentence strings, mirrors `current_chunks`
-    var current = Vector.empty[String]
-    var currentCount = leadLen
+    // current chunk's token-trimmed sentences and their token counts,
+    // mirrors `current_chunks`; currentCount excludes the lead
+    val current = scala.collection.mutable.ArrayBuffer.empty[String]
+    val counts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var currentCount = 0
 
     def flushCurrent(): Unit =
       if (current.nonEmpty) chunks += (LeadText + current.mkString(" "))
 
     sentences.foreach { sentence =>
-      val tokens = SimpleTokenizer.encode(sentence)
-      val sentLen = tokens.length
-      if (leadLen + sentLen > maxTokens) {
+      val sentLen = SimpleTokenizer.countTokens(sentence)
+      if (sentLen > budget) {
         // oversized sentence: flush, emit truncated as its own chunk, reset
         flushCurrent()
-        val truncated =
-          SimpleTokenizer.decode(tokens.take(math.max(0, maxTokens - leadLen)))
-        chunks += (LeadText + truncated)
-        current = Vector.empty
-        currentCount = leadLen
-      } else if (currentCount + sentLen > maxTokens) {
-        val overlap = current.takeRight(math.max(0, numOverlapSentences))
-        flushCurrent()
-        val overlapCount =
-          SimpleTokenizer.encode(overlap.mkString(" ")).length
-        if (leadLen + overlapCount + sentLen > maxTokens) {
-          current = Vector(SimpleTokenizer.decode(tokens))
-          currentCount = leadLen + sentLen
-        } else {
-          current = overlap :+ SimpleTokenizer.decode(tokens)
-          currentCount = leadLen + overlapCount + sentLen
-        }
+        chunks += (LeadText + SimpleTokenizer.truncate(sentence, budget))
+        current.clear(); counts.clear()
+        currentCount = 0
       } else {
-        current = current :+ SimpleTokenizer.decode(tokens)
+        if (currentCount + sentLen > budget) {
+          flushCurrent()
+          val drop = math.max(0, current.length - keep)
+          current.remove(0, drop); counts.remove(0, drop)
+          currentCount = counts.sum
+          if (currentCount + sentLen > budget) {
+            current.clear(); counts.clear()
+            currentCount = 0
+          }
+        }
+        current += SimpleTokenizer.truncate(sentence, sentLen)
+        counts += sentLen
         currentCount += sentLen
       }
     }

@@ -13,10 +13,9 @@ package graft.text
   *     the same property for already-clean text)
   *   - token counts are CONTEXT-FREE and ADDITIVE:
   *     `count(a + " " + b) == count(a) + count(b)` — this makes the
-  *     chunker's budget arithmetic exact (no re-encode drift) while the
-  *     reference must re-encode joined overlap text
-  *     (embedding_service.py:124-126); we still re-encode where the
-  *     reference does, for semantic fidelity.
+  *     chunker's budget arithmetic exact: it sums per-sentence counts
+  *     where the reference re-encodes joined overlap text
+  *     (embedding_service.py:124-126).
   *   - truncation to n tokens can cut inside a long word at a subword
   *     boundary, like BPE.
   *
@@ -39,39 +38,50 @@ object SimpleTokenizer {
 
   @inline def isWs(c: Char): Boolean = Character.isWhitespace(c)
 
+  /** The ONE token-boundary scan: each `next()` advances to the next
+    * token and exposes its whitespace-free char range `[start, end)`.
+    * Word runs are cut into `SubwordLen`-char subwords, every other
+    * non-space char is one token, whitespace belongs to no token.
+    * Allocation-free per token — the embedder hashes these ranges in its
+    * per-row hot loop.
+    */
+  final class Cursor(text: String) {
+    private[this] val n = if (text == null) 0 else text.length
+    private[this] var wordEnd = 0 // end of the word run being sliced
+    private[this] var from = 0
+    private[this] var until = 0
+
+    /** The current token's range; valid after `next()` returned true. */
+    def start: Int = from
+    def end: Int = until
+
+    def next(): Boolean = {
+      var i = until
+      if (i >= wordEnd) {
+        while (i < n && isWs(text.charAt(i))) i += 1
+        if (i >= n) return false
+        if (isWordChar(text.charAt(i))) {
+          var j = i + 1
+          while (j < n && isWordChar(text.charAt(j))) j += 1
+          wordEnd = j
+        } else wordEnd = i + 1
+      }
+      from = i
+      until = math.min(i + SubwordLen, wordEnd)
+      true
+    }
+  }
+
   /** Tokenize into pieces; concatenation of pieces == input minus trailing
     * whitespace. Each piece carries its leading whitespace.
     */
   def encode(text: String): Vector[String] = {
-    if (text == null || text.isEmpty) return Vector.empty
     val out = Vector.newBuilder[String]
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      val wsStart = i
-      while (i < n && isWs(text.charAt(i))) i += 1
-      if (i < n) {
-        val ws = text.substring(wsStart, i)
-        val c = text.charAt(i)
-        if (isWordChar(c)) {
-          val wStart = i
-          while (i < n && isWordChar(text.charAt(i))) i += 1
-          // slice word into SubwordLen-char subwords; first carries the ws
-          var j = wStart
-          var first = true
-          while (j < i) {
-            val k = math.min(j + SubwordLen, i)
-            val piece = text.substring(j, k)
-            out += (if (first) ws + piece else piece)
-            first = false
-            j = k
-          }
-        } else {
-          out += (ws + c)
-          i += 1
-        }
-      }
-      // trailing whitespace (i == n after ws scan) is dropped
+    val cur = new Cursor(text)
+    var prevEnd = 0
+    while (cur.next()) {
+      out += text.substring(prevEnd, cur.end)
+      prevEnd = cur.end
     }
     out.result()
   }
@@ -85,6 +95,23 @@ object SimpleTokenizer {
     s.substring(b)
   }
 
-  def countTokens(text: String, addSpecialTokens: Boolean = false): Int =
-    encode(text).length + (if (addSpecialTokens) NumSpecialTokens else 0)
+  def countTokens(text: String, addSpecialTokens: Boolean = false): Int = {
+    val cur = new Cursor(text)
+    var count = if (addSpecialTokens) NumSpecialTokens else 0
+    while (cur.next()) count += 1
+    count
+  }
+
+  /** The first `n` tokens as text — `decode(encode(text).take(n))`
+    * without building the pieces: the slice from the first token's start
+    * to the n-th token's end.
+    */
+  def truncate(text: String, n: Int): String = {
+    val cur = new Cursor(text)
+    if (n <= 0 || !cur.next()) return ""
+    val from = cur.start
+    var k = 1
+    while (k < n && cur.next()) k += 1
+    text.substring(from, cur.end)
+  }
 }

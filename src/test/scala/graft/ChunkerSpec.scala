@@ -72,6 +72,21 @@ object ChunkerProps extends Properties("Chunker") {
       SimpleTokenizer.encode(a + " " + b).length ==
         SimpleTokenizer.encode(a).length + SimpleTokenizer.encode(b).length
     }
+
+  // U+2003 / U+3000 / U+2028 are whitespace to the tokenizer (and U+2003 /
+  // U+3000 survive String.trim); U+00A0 is not whitespace to it
+  private val mixedWs: Gen[String] =
+    Gen.listOf(Gen.frequency(
+      4 -> Gen.asciiPrintableStr,
+      1 -> Gen.oneOf(" ", "\t", "\n", "\u2003", "\u3000", "\u2028", "\u00a0")
+    )).map(_.mkString)
+
+  property("tokenizer scan: truncate and countTokens agree with encode") =
+    Prop.forAll(mixedWs, Gen.chooseNum(-1, 40)) { (s, n) =>
+      val pieces = SimpleTokenizer.encode(s)
+      SimpleTokenizer.truncate(s, n) == SimpleTokenizer.decode(pieces.take(n)) &&
+        SimpleTokenizer.countTokens(s) == pieces.length
+    }
 }
 
 class ChunkerSpec extends AnyFunSuite {

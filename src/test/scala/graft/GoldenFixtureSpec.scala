@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.embed.Embedder
 import graft.text.{Chunker, SentenceSplitter, SimpleTokenizer}
 
 /** Golden-fixture parity tests on the reference's ONLY real test corpus:
@@ -146,5 +147,58 @@ class GoldenFixtureSpec extends AnyFunSuite {
             s"'${bFirst.take(40)}...'")
       case _ => ()
     }
+  }
+
+  /** Edge cases for the token-boundary rule at sentence and truncation
+    * edges: U+2003 / U+3000 (kept by `String.trim`, whitespace to the
+    * tokenizer), U+00A0 (not whitespace to the tokenizer), a 40-char word
+    * straddling the truncation cut at both budgets, a pair of sentences
+    * whose overlap would overflow the next chunk, and empty or
+    * whitespace-only text.
+    */
+  private val adversarial: Vector[String] = {
+    val word40 = "Abcdefghij" * 4
+    Vector(
+      "",
+      "   \n\t  ",
+      "\u2003\u3000",
+      "\u00a0",
+      "\u2003Leading em space here. Next sentence ends with one.\u2003",
+      "Ideographic space edges.\u3000 Second sentence\u3000inside. Third.\u3000",
+      "Section\u00a05 applies. The\u00a0court held\u00a0so.\u00a0 Done.",
+      "\u00a0Starts with a no-break space. Ends with one.\u00a0",
+      ("ab " * 52) + word40 + " end. Short tail sentence.",
+      ("ab " * 500) + word40 + " end. Short tail sentence.",
+      ("Alpha " * 28).trim + ". " + ("Beta " * 28).trim + ". " +
+        ("Gamma " * 28).trim + ".",
+      (1 to 40).map(i => s"Sentence $i has a few short words.").mkString(" "),
+      "Caf\u00e9 na\u00efve \u4e2d\u6587 \ud83d\ude00 emoji. x_y_z 12345678 __init__!"
+    )
+  }
+
+  test("golden digest: SHA-256 of every chunk and vector over the fixture and edge cases") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def putInt(v: Int): Unit =
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(v).array())
+    def putStr(s: String): Unit = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      putInt(b.length); md.update(b)
+    }
+    def putVec(v: Array[Float]): Unit = {
+      putInt(v.length)
+      v.foreach(f => putInt(java.lang.Float.floatToIntBits(f)))
+    }
+    val inputs = text +: adversarial
+    inputs.foreach(t => putVec(Embedder.embed(t)))
+    for (maxTokens <- Seq(64, 512); overlap <- Seq(0, 2); t <- inputs) {
+      val chunks = Chunker.split(t, maxTokens, overlap)
+      putInt(chunks.length)
+      chunks.foreach { c => putStr(c); putVec(Embedder.embed(c)) }
+    }
+    val hex = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    // pins every chunk string and vector bit: any drift in the tokenizer,
+    // chunker or embedder output changes it
+    assert(hex ==
+      "3e6ee967f8d3a291b6961292935003d831809d1d74b523bef98e5e1e74e2c425")
   }
 }
