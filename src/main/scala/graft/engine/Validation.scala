@@ -88,8 +88,7 @@ object Validation {
   ): Unit = {
     // null behaves like the DataFrame paths (Option(text).getOrElse("")):
     // empty → text_too_short through the validation error path, not an NPE
-    val len = Option(text).getOrElse("")
-      .replaceAll("(?U)^\\s+|\\s+$", "").length // Unicode strip, like the Column path
+    val len = TextCleaner.strippedLength(Option(text).getOrElse(""))
     if (len < conf.minTextLength) {
       metrics.foreach(_.errorCount(endpoint, TextTooShort.label).add(1L))
       throw new IllegalArgumentException(

@@ -30,6 +30,12 @@ import java.util.Locale
   * sentence starter; this pass never does. No such case exists in the
   * fixture.
   *
+  * The merge test ([[endsWithAbbreviation]]) reads only the tail of each
+  * span, by index, with the semantics of the unanchored regex
+  * `([A-Za-z]+)\.\s*$` — including `$` matching before a final line
+  * terminator — so a boundary costs its last word, not a regex search
+  * over the whole span. ChunkerProps pins the scan to that regex.
+  *
   * Pure function; the Spark UDF wrapper lives in InceptionEngine. No
   * network/retry logic is needed (the reference's retry handles NLTK
   * resource downloads, embedding_service.py:66-78 — N/A offline).
@@ -48,44 +54,67 @@ object SentenceSplitter {
     "pp", "cf", "al", "ca", "approx", "jan", "feb", "mar", "apr", "jun",
     "jul", "aug", "sep", "sept", "oct", "nov", "dec")
 
-  /** Last word-token of a span when it ends with `<token>.` (possibly
-    * followed by whitespace); the boundary after it is suppressed for
-    * single letters and [[Abbreviations]].
+  /** Whether the span `text[from, to)` ends with `<token>.` followed only
+    * by whitespace, where `<token>` is the whole ASCII-letter run before the
+    * period; the boundary after it is suppressed for single letters and
+    * [[Abbreviations]].
+    *
+    * One backward scan over the span's tail, with the semantics of the
+    * unanchored regex `([A-Za-z]+)\.\s*$` (ASCII `\s`, leftmost match):
+    *   1. drop one final U+0085 / U+2028 / U+2029 — `$` also matches
+    *      before a final line terminator, and these three are the
+    *      terminators ASCII `\s` does not cover (`\n`, `\r` are skipped
+    *      by step 2);
+    *   2. skip ASCII whitespace ` \t\n\x0B\f\r`;
+    *   3. require `.`;
+    *   4. walk back over `[A-Za-z]` to the start of the run (never past
+    *      `from`); an empty run is no match.
     */
-  private val AbbrevTail = """([A-Za-z]+)\.\s*$""".r
-
-  private def endsWithAbbreviation(s: CharSequence): Boolean =
-    AbbrevTail.findFirstMatchIn(s) match {
-      case Some(m) =>
-        val tok = m.group(1)
-        // require the token to START a word (preceded by start/non-letter):
-        // "schools." must not match via its tail
-        val at = m.start(1)
-        val standalone = at == 0 || !Character.isLetter(s.charAt(at - 1))
-        if (!standalone) false
-        else if (tok.length > 1)
-          Abbreviations.contains(tok.toLowerCase(Locale.ROOT))
-        else if (Character.isLowerCase(tok.charAt(0)))
-          true // citation/page particles: "v.", "p.", "n." never end a sentence
-        else
-          // an UPPERCASE single letter is an initial only in name position —
-          // following a capitalized token ("John F. Kennedy", "Brown B. Smith").
-          // After a lowercase word ("...vitamin C.") punkt's sentence-starter
-          // heuristic re-breaks; so do we.
-          prevWordIsCapitalized(s, at)
-      case None => false
+  private[graft] def endsWithAbbreviation(text: String, from: Int, to: Int): Boolean = {
+    var end = to
+    if (end > from) {
+      val last = text.charAt(end - 1)
+      if (last == '\u0085' || last == '\u2028' || last == '\u2029') end -= 1
     }
+    while (end > from && isAsciiSpace(text.charAt(end - 1))) end -= 1
+    if (end == from || text.charAt(end - 1) != '.') return false
+    val dot = end - 1
+    var at = dot
+    while (at > from && isAsciiLetter(text.charAt(at - 1))) at -= 1
+    if (at == dot) return false
+    // require the token to START a word (preceded by start/non-letter):
+    // "schools." must not match via its tail
+    val standalone = at == from || !Character.isLetter(text.charAt(at - 1))
+    if (!standalone) false
+    else if (dot - at > 1)
+      Abbreviations.contains(text.substring(at, dot).toLowerCase(Locale.ROOT))
+    else if (Character.isLowerCase(text.charAt(at)))
+      true // citation/page particles: "v.", "p.", "n." never end a sentence
+    else
+      // an UPPERCASE single letter is an initial only in name position —
+      // following a capitalized token ("John F. Kennedy", "Brown B. Smith").
+      // After a lowercase word ("...vitamin C.") punkt's sentence-starter
+      // heuristic re-breaks; so do we.
+      prevWordIsCapitalized(text, from, at)
+  }
+
+  private def isAsciiSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r') // \t \n \x0B \f \r
+
+  private def isAsciiLetter(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 
   /** Whether the word token immediately before position `at` (skipping
-    * intervening non-alphanumerics) starts with an uppercase letter.
+    * intervening non-alphanumerics, never looking before `from`) starts
+    * with an uppercase letter.
     */
-  private def prevWordIsCapitalized(s: CharSequence, at: Int): Boolean = {
+  private def prevWordIsCapitalized(s: String, from: Int, at: Int): Boolean = {
     var i = at - 1
-    while (i >= 0 && !Character.isLetterOrDigit(s.charAt(i))) i -= 1
-    if (i < 0) false
+    while (i >= from && !Character.isLetterOrDigit(s.charAt(i))) i -= 1
+    if (i < from) false
     else {
       var j = i
-      while (j >= 0 && Character.isLetterOrDigit(s.charAt(j))) j -= 1
+      while (j >= from && Character.isLetterOrDigit(s.charAt(j))) j -= 1
       Character.isUpperCase(s.charAt(j + 1))
     }
   }
@@ -109,8 +138,7 @@ object SentenceSplitter {
     var end = it.next()
     while (end != BreakIterator.DONE) {
       if (spans.nonEmpty &&
-          endsWithAbbreviation(
-            java.nio.CharBuffer.wrap(text, spans.last._1, spans.last._2)))
+          endsWithAbbreviation(text, spans.last._1, spans.last._2))
         spans(spans.length - 1) = (spans.last._1, end)
       else spans += ((start, end))
       start = end

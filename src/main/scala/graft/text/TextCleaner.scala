@@ -39,15 +39,52 @@ object TextCleaner {
     */
   def isNonEmptyAfterCleaning(cleaned: Column): Column = length(cleaned) > 0
 
+  /** The code points `(?U)\s` matches — Unicode White_Space, 25 chars —
+    * as one string, read off the JDK pattern once at class init (one
+    * `find` pass over the BMP) so the set is the regex's by construction
+    * rather than a hand-written list. White_Space has no code point past
+    * the BMP; CleanerSpec checks that against the same pattern.
+    */
+  val UnicodeWhiteSpace: String = {
+    val bmp = new java.lang.StringBuilder(0x10000)
+    var c = 0
+    while (c <= 0xFFFF) {
+      if (!Character.isSurrogate(c.toChar)) bmp.append(c.toChar)
+      c += 1
+    }
+    val m = java.util.regex.Pattern.compile("(?U)\\s").matcher(bmp)
+    val ws = new java.lang.StringBuilder
+    while (m.find()) ws.append(m.group())
+    ws.toString
+  }
+
   /** Whitespace-insensitive trimmed length used by O1 validation
-    * (utils.py:95 `len(text.strip())`). Python's strip() removes UNICODE
+    * (utils.py:95 `len(text.strip())`): the length, in code points, of
+    * `trim(text, UnicodeWhiteSpace)`. Python's strip() removes UNICODE
     * whitespace — Java's bare `\s` is ASCII-only and would accept a doc
-    * padded with NBSP/ideographic space that the reference rejects, so
-    * the (?U) flag widens `\s` to \p{IsWhite_Space}. The DuckDB oracle
-    * mirrors it as the RE2 class `[\s\p{Z}\x{85}]` (same code points).
+    * padded with NBSP/ideographic space that the reference rejects — so
+    * the trim set is the JDK White_Space set [[UnicodeWhiteSpace]]. The
+    * DuckDB oracle mirrors it as the RE2 class `[\s\p{Z}\x{85}]`, which
+    * covers the same code points but U+000B (RE2's `\s` has no `\v`).
+    * A character-set trim, not a regex: this runs over every full
+    * document, and an unanchored `(?U)^\s+|\s+$` tries a match at every
+    * position. Codegen'd, no UDF.
     */
   def strippedLength(text: Column): Column =
-    length(regexp_replace(text, "(?U)^\\s+|\\s+$", ""))
+    length(trim(text, UnicodeWhiteSpace))
+
+  /** Scalar twin of the Column [[strippedLength]] for the single-query
+    * path: same [[UnicodeWhiteSpace]] set, length in code points like
+    * Spark's `length` and Python's `len`. CleanerSpec asserts they agree.
+    */
+  def strippedLength(text: String): Int = {
+    // the set is all BMP, so a surrogate half is never stripped
+    var s = 0
+    var e = text.length
+    while (s < e && UnicodeWhiteSpace.indexOf(text.charAt(s)) >= 0) s += 1
+    while (e > s && UnicodeWhiteSpace.indexOf(text.charAt(e - 1)) >= 0) e -= 1
+    text.codePointCount(s, e)
+  }
 
   /** Plain-Scala twin of [[cleanTextForJson]] for pure-function call sites
     * (chunker tests, single-query path). Kept in lockstep with the Column

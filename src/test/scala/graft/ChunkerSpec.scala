@@ -87,6 +87,104 @@ object ChunkerProps extends Properties("Chunker") {
       SimpleTokenizer.truncate(s, n) == SimpleTokenizer.decode(pieces.take(n)) &&
         SimpleTokenizer.countTokens(s) == pieces.length
     }
+
+  // --- splitter: the tail scan against the regex predicate it replaced ---
+
+  // The abbreviation test as it stood before the tail scan, kept verbatim
+  // as the spec: an unanchored regex over the span, then the standalone,
+  // abbreviation-set and name-position rules.
+  private object RegexSpec {
+    private val Abbreviations = Set(
+      "vs", "no", "nos", "mr", "mrs", "ms", "dr", "prof", "rev", "hon",
+      "jr", "sr", "st", "etc", "inc", "ltd", "co", "corp", "dept", "div",
+      "est", "fig", "figs", "vol", "vols", "sec", "art", "ch", "para",
+      "pp", "cf", "al", "ca", "approx", "jan", "feb", "mar", "apr", "jun",
+      "jul", "aug", "sep", "sept", "oct", "nov", "dec")
+
+    private val AbbrevTail = """([A-Za-z]+)\.\s*$""".r
+
+    def endsWithAbbreviation(s: CharSequence): Boolean =
+      AbbrevTail.findFirstMatchIn(s) match {
+        case Some(m) =>
+          val tok = m.group(1)
+          val at = m.start(1)
+          val standalone = at == 0 || !Character.isLetter(s.charAt(at - 1))
+          if (!standalone) false
+          else if (tok.length > 1)
+            Abbreviations.contains(tok.toLowerCase(java.util.Locale.ROOT))
+          else if (Character.isLowerCase(tok.charAt(0))) true
+          else prevWordIsCapitalized(s, at)
+        case None => false
+      }
+
+    private def prevWordIsCapitalized(s: CharSequence, at: Int): Boolean = {
+      var i = at - 1
+      while (i >= 0 && !Character.isLetterOrDigit(s.charAt(i))) i -= 1
+      if (i < 0) false
+      else {
+        var j = i
+        while (j >= 0 && Character.isLetterOrDigit(s.charAt(j))) j -= 1
+        Character.isUpperCase(s.charAt(j + 1))
+      }
+    }
+
+    def split(text: String): Vector[String] = {
+      if (text == null || text.isEmpty) return Vector.empty
+      val it = java.text.BreakIterator.getSentenceInstance(java.util.Locale.US)
+      it.setText(text)
+      val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      var start = it.first()
+      var end = it.next()
+      while (end != java.text.BreakIterator.DONE) {
+        if (spans.nonEmpty &&
+            endsWithAbbreviation(
+              java.nio.CharBuffer.wrap(text, spans.last._1, spans.last._2)))
+          spans(spans.length - 1) = (spans.last._1, end)
+        else spans += ((start, end))
+        start = end
+        end = it.next()
+      }
+      spans.iterator
+        .map { case (s, e) => text.substring(s, e).trim }
+        .filter(_.nonEmpty)
+        .toVector
+    }
+  }
+
+  // abbreviations, initials in and out of name position, a non-ASCII letter
+  // before an ASCII run, CRLF and the three non-ASCII line terminators
+  private val splitterPiece: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("v.", "No.", "Inc.", "etc.", "John F. Kennedy",
+      "vitamin C.", "\u00e9.", "a\u00e9.", "\u00e9a.", "schools.", "p.",
+      "A.", "B.", "5.", "U.S.", ".", "(", ")", "\"", "The", "Board",
+      "Smith", "court"),
+    3 -> word,
+    1 -> Gen.oneOf("\r\n", "\n", "\r", "\t", "\u000b", "\f", "\u0085",
+      "\u2028", "\u2029", "\u00a0", "\u3000"))
+
+  private val splitterSep: Gen[String] =
+    Gen.oneOf(" ", " ", " ", "", "  ", "\r\n", "\n", "\u0085", "\u2028",
+      "\u2029", ". ")
+
+  private def splitterText(maxPieces: Int): Gen[String] = for {
+    n <- Gen.chooseNum(0, maxPieces)
+    ps <- Gen.listOfN(n, Gen.zip(splitterPiece, splitterSep))
+  } yield ps.map { case (p, sep) => p + sep }.mkString
+
+  property("splitter: tail scan splits exactly like the regex predicate") =
+    Prop.forAll(splitterText(40)) { t =>
+      SentenceSplitter.split(t) == RegexSpec.split(t)
+    }
+
+  property("splitter: tail scan agrees with the regex on every span") =
+    Prop.forAll(splitterText(8)) { t =>
+      (0 to t.length).forall { from =>
+        (from to t.length).forall { to =>
+          SentenceSplitter.endsWithAbbreviation(t, from, to) ==
+            RegexSpec.endsWithAbbreviation(java.nio.CharBuffer.wrap(t, from, to))
+        }
+      }
+    }
 }
 
 class ChunkerSpec extends AnyFunSuite {

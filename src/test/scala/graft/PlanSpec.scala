@@ -125,6 +125,16 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
   }
 
+  test("flagship embed pipeline validates without a regex over the document text") {
+    val engine = new graft.engine.InceptionEngine()
+    val plan = engine
+      .embedDocuments(spark.read.parquet(s"$sf/documents.parquet"))
+      .queryExecution.executedPlan.toString
+    // the length check is present, as a character-set trim
+    assert(plan.contains("trim("), plan)
+    assert(!plan.contains("regexp_replace"), s"regex in the flagship plan:\n$plan")
+  }
+
   test("pre-partitioned equi-join reuses the partitioning (no third exchange)") {
     val o = spark.read.parquet(s"$sf/orders.parquet")
       .repartition(4, col("o_orderkey"))
