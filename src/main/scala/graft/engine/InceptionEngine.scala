@@ -1,11 +1,13 @@
 package graft.engine
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.config.EngineConfig
 import graft.text.{Chunker, SentenceSplitter, TextCleaner}
+import graft.util.OrderedFanOut
 
 /** One chunk's result — reference `ChunkEmbedding` (inception/schemas.py:46-59). */
 final case class ChunkEmbedding(
@@ -49,6 +51,15 @@ final case class EmbeddedChunk(
   *     SURVEY.md §4).
   *   - Per-doc work is bounded by `maxTextLength`, so task skew is capped;
   *     documents are hash-distributed across partitions by the scan.
+  *   - An UNDER-SPLIT stage fans out inside its own tasks instead of
+  *     repartitioning: a one-row-group parquet file is one scan task, and
+  *     that task hands its documents' chunk-and-embed work to
+  *     `slots / partitions` threads ([[InceptionEngine.fanOutWidth]],
+  *     capped at the executor's cores; [[graft.util.OrderedFanOut]]) while
+  *     it keeps scanning, validating and decoding. Rows come back in
+  *     input order and metrics are recorded on the task thread. The plan
+  *     is unchanged — still zero shuffles, no extra stage — and a stage
+  *     with a partition per slot runs with width 1, one thread per task.
   */
 class InceptionEngine(
     val conf: EngineConfig = EngineConfig.default,
@@ -246,7 +257,10 @@ class InceptionEngine(
     * embedding_service.py:167-257): one row per document with its ordered
     * `ChunkEmbedding` array. Zero shuffles: chunk, embed, and reassemble
     * all happen inside one mapPartitions, eliminating the reference's
-    * order-coupled positional zip (SURVEY.md §7.4.4).
+    * order-coupled positional zip (SURVEY.md §7.4.4). When the stage has
+    * fewer partitions than the cluster has slots, each task runs that
+    * per-document work on [[InceptionEngine.fanOutWidth]] threads, in
+    * input order (see the scale design notes).
     *
     * Duplicate ids: the reference silently last-wins via dict build
     * (routes/embedding.py:117); with no row order in a DataFrame we keep
@@ -277,19 +291,25 @@ class InceptionEngine(
     val chunkAcc = metrics.map(_.chunkCount("text"))
     val timeHist = metrics.map(_.processingTimeHistogram("batch"))
     val mdl = model
+    val slots = spark.sparkContext.defaultParallelism
     valid.mapPartitions { docs =>
-      docs.map { d =>
-        val t0 = System.nanoTime()
-        val chunks = Chunker.split(d.text, mt, ov)
-        chunkAcc.foreach(_.add(chunks.size.toLong))
-        val vecs =
-          chunks.grouped(batchSize).flatMap(mdl.embedBatch).toVector
-        timeHist.foreach(_.observe((System.nanoTime() - t0) / 1000000L))
-        val embs = chunks.lazyZip(vecs).zipWithIndex.map {
-          case ((chunk, v), idx) =>
-            ChunkEmbedding(idx + 1, chunk.replace(Chunker.LeadText, ""), v)
+      val embed = (d: Document) =>
+        InceptionEngine.chunkAndEmbed(d, mdl, mt, ov, batchSize)
+      val task = TaskContext.get()
+      val width = InceptionEngine.fanOutWidth(slots, task.numPartitions(),
+        Runtime.getRuntime.availableProcessors())
+      val results =
+        if (width == 1) docs.map(embed)
+        else {
+          val window = OrderedFanOut.map(docs, width)(embed)
+          task.addTaskCompletionListener[Unit](_ => window.close())
+          window
         }
-        DocumentEmbeddings(d.doc_id, embs.toVector)
+      // accumulators are not thread-safe: metrics stay on the task thread
+      results.map { case (out, nChunks, elapsedMs) =>
+        chunkAcc.foreach(_.add(nChunks.toLong))
+        timeHist.foreach(_.observe(elapsedMs))
+        out
       }
     }
   }
@@ -337,4 +357,38 @@ class InceptionEngine(
     */
   def metricsExposition: Option[String] =
     if (conf.enableMetrics) metrics.map(_.exposition) else None
+}
+
+object InceptionEngine {
+
+  /** Threads one flagship task fans its documents out to: the cluster's
+    * task slots over the stage's partition count, capped at the
+    * executor's cores. A stage with at least one partition per slot gets
+    * 1 (no fan-out); an under-split scan — one row group, one task —
+    * spreads its chunk-and-embed work over the slots it leaves idle.
+    */
+  private[graft] def fanOutWidth(slots: Int, partitions: Int, cores: Int): Int =
+    math.max(1, math.min(slots / partitions, cores))
+
+  /** The flagship's per-document work, pure so it can run off the task
+    * thread: chunk, embed in `batchSize` micro-batches, reassemble.
+    * Returns the row, its chunk count and the elapsed milliseconds.
+    */
+  private def chunkAndEmbed(
+      d: Document,
+      mdl: graft.embed.EmbeddingModel,
+      maxTokens: Int,
+      overlap: Int,
+      batchSize: Int
+  ): (DocumentEmbeddings, Int, Long) = {
+    val t0 = System.nanoTime()
+    val chunks = Chunker.split(d.text, maxTokens, overlap)
+    val vecs = chunks.grouped(batchSize).flatMap(mdl.embedBatch).toVector
+    val elapsedMs = (System.nanoTime() - t0) / 1000000L
+    val embs = chunks.lazyZip(vecs).zipWithIndex.map {
+      case ((chunk, v), idx) =>
+        ChunkEmbedding(idx + 1, chunk.replace(Chunker.LeadText, ""), v)
+    }
+    (DocumentEmbeddings(d.doc_id, embs.toVector), chunks.size, elapsedMs)
+  }
 }

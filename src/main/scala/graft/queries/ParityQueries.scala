@@ -163,10 +163,9 @@ private[graft] trait SparkEntryParity { this: SparkEntry.type =>
     */
   def qDocReassembly(s: SparkSession, dir: String): DataFrame = {
     val (eng, checked) = packedCorpus(s, dir)
-    // fanout (r16): per-doc chunk+embed is the heaviest per-row kernel
-    // in the suite and rows are independent — parallelize past the
-    // single-row-group scan task (no-op at real input widths)
-    eng.embedDocuments(fanout(checked), "doc_id", "text2")
+    // no repartition: the flagship kernel fans its one-row-group scan
+    // task out across the idle slots itself
+    eng.embedDocuments(checked, "doc_id", "text2")
       .toDF()
       .select(col("doc_id"),
         posexplode(col("embeddings")).as(Seq("pos", "ce")))

@@ -64,8 +64,9 @@ object TextCleaner {
     * whitespace — Java's bare `\s` is ASCII-only and would accept a doc
     * padded with NBSP/ideographic space that the reference rejects — so
     * the trim set is the JDK White_Space set [[UnicodeWhiteSpace]]. The
-    * DuckDB oracle mirrors it as the RE2 class `[\s\p{Z}\x{85}]`, which
-    * covers the same code points but U+000B (RE2's `\s` has no `\v`).
+    * DuckDB oracle mirrors it as the RE2 class `[\s\p{Z}\x{0B}\x{85}]`,
+    * which covers the same code points (U+000B is spelled out because
+    * RE2's `\s` has no `\v`).
     * A character-set trim, not a regex: this runs over every full
     * document, and an unanchored `(?U)^\s+|\s+$` tries a match at every
     * position. Codegen'd, no UDF.

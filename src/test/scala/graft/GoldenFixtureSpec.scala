@@ -22,11 +22,7 @@ import graft.text.{Chunker, SentenceSplitter, SimpleTokenizer}
   */
 class GoldenFixtureSpec extends AnyFunSuite {
 
-  private val text: String = {
-    val in = getClass.getResourceAsStream("/sample_opinion.txt")
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
+  import GoldenFixtureSpec.{adversarial, text}
 
   private val leadLen =
     SimpleTokenizer.countTokens(Chunker.LeadText, addSpecialTokens = true)
@@ -149,33 +145,6 @@ class GoldenFixtureSpec extends AnyFunSuite {
     }
   }
 
-  /** Edge cases for the token-boundary rule at sentence and truncation
-    * edges: U+2003 / U+3000 (kept by `String.trim`, whitespace to the
-    * tokenizer), U+00A0 (not whitespace to the tokenizer), a 40-char word
-    * straddling the truncation cut at both budgets, a pair of sentences
-    * whose overlap would overflow the next chunk, and empty or
-    * whitespace-only text.
-    */
-  private val adversarial: Vector[String] = {
-    val word40 = "Abcdefghij" * 4
-    Vector(
-      "",
-      "   \n\t  ",
-      "\u2003\u3000",
-      "\u00a0",
-      "\u2003Leading em space here. Next sentence ends with one.\u2003",
-      "Ideographic space edges.\u3000 Second sentence\u3000inside. Third.\u3000",
-      "Section\u00a05 applies. The\u00a0court held\u00a0so.\u00a0 Done.",
-      "\u00a0Starts with a no-break space. Ends with one.\u00a0",
-      ("ab " * 52) + word40 + " end. Short tail sentence.",
-      ("ab " * 500) + word40 + " end. Short tail sentence.",
-      ("Alpha " * 28).trim + ". " + ("Beta " * 28).trim + ". " +
-        ("Gamma " * 28).trim + ".",
-      (1 to 40).map(i => s"Sentence $i has a few short words.").mkString(" "),
-      "Caf\u00e9 na\u00efve \u4e2d\u6587 \ud83d\ude00 emoji. x_y_z 12345678 __init__!"
-    )
-  }
-
   test("golden digest: SHA-256 of every chunk and vector over the fixture and edge cases") {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     def putInt(v: Int): Unit =
@@ -200,5 +169,42 @@ class GoldenFixtureSpec extends AnyFunSuite {
     // chunker or embedder output changes it
     assert(hex ==
       "3e6ee967f8d3a291b6961292935003d831809d1d74b523bef98e5e1e74e2c425")
+  }
+}
+
+object GoldenFixtureSpec {
+
+  /** The reference's sample opinion (1,148-char Brown v. Board excerpt). */
+  val text: String = {
+    val in = getClass.getResourceAsStream("/sample_opinion.txt")
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** Edge cases for the token-boundary rule at sentence and truncation
+    * edges: U+2003 / U+3000 (kept by `String.trim`, whitespace to the
+    * tokenizer), U+00A0 (not whitespace to the tokenizer), a 40-char word
+    * straddling the truncation cut at both budgets, a pair of sentences
+    * whose overlap would overflow the next chunk, and empty or
+    * whitespace-only text.
+    */
+  val adversarial: Vector[String] = {
+    val word40 = "Abcdefghij" * 4
+    Vector(
+      "",
+      "   \n\t  ",
+      "\u2003\u3000",
+      "\u00a0",
+      "\u2003Leading em space here. Next sentence ends with one.\u2003",
+      "Ideographic space edges.\u3000 Second sentence\u3000inside. Third.\u3000",
+      "Section\u00a05 applies. The\u00a0court held\u00a0so.\u00a0 Done.",
+      "\u00a0Starts with a no-break space. Ends with one.\u00a0",
+      ("ab " * 52) + word40 + " end. Short tail sentence.",
+      ("ab " * 500) + word40 + " end. Short tail sentence.",
+      ("Alpha " * 28).trim + ". " + ("Beta " * 28).trim + ". " +
+        ("Gamma " * 28).trim + ".",
+      (1 to 40).map(i => s"Sentence $i has a few short words.").mkString(" "),
+      "Caf\u00e9 na\u00efve \u4e2d\u6587 \ud83d\ude00 emoji. x_y_z 12345678 __init__!"
+    )
   }
 }
