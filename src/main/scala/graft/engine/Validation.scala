@@ -30,12 +30,16 @@ object Validation {
   case object GpuError extends EngineError { val label = "gpu_error" }
   case object ProcessingError extends EngineError { val label = "processing_error" }
 
+  /** Stripped length, null `text` as 0: too short, not valid (ref `text: str`). */
+  private def strippedLength(text: Column): Column =
+    coalesce(TextCleaner.strippedLength(text), lit(0))
+
   /** `error_type` expression for the document/batch endpoints
     * (`endpoint != "query"`: max = maxTextLength, label "text_too_long",
     * utils.py:105-110). Null when valid.
     */
   def textErrorType(text: Column, conf: EngineConfig): Column = {
-    val len = TextCleaner.strippedLength(text)
+    val len = strippedLength(text)
     when(len < conf.minTextLength, TextTooShort.label)
       .when(len > conf.maxTextLength, TextTooLong.label)
       .otherwise(lit(null: String))
@@ -47,7 +51,7 @@ object Validation {
     * (embedding_service.py:156).
     */
   def queryErrorType(text: Column, conf: EngineConfig): Column = {
-    val len = TextCleaner.strippedLength(text)
+    val len = strippedLength(text)
     when(len < conf.minTextLength, TextTooShort.label)
       .when(len > conf.maxQueryLength, QueryTooLong.label)
       .when(
@@ -64,7 +68,7 @@ object Validation {
     * Null when valid.
     */
   def textErrorMessage(id: Column, text: Column, conf: EngineConfig): Column = {
-    val len = TextCleaner.strippedLength(text)
+    val len = strippedLength(text)
     when(len < conf.minTextLength,
       concat(lit("Document "), id.cast("string"),
         lit(": Text length ("), len.cast("string"),

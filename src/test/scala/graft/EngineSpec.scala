@@ -266,6 +266,19 @@ class EngineSpec extends AnyFunSuite {
     assert(out(2).isNullAt(1) && out(2).isNullAt(2))
   }
 
+  test("null text routes to text_too_short like empty text, not to a valid 0-chunk document") {
+    val df = docsDf(1L -> (null: String), 2L -> "some text")
+    val out = engine.withValidation(df)
+      .withColumn("query_error_type", engine.queryErrorType(col("text")))
+      .select("doc_id", "error_type", "error", "query_error_type")
+      .collect().sortBy(_.getLong(0))
+    assert(out(0).getString(1) == "text_too_short")
+    assert(out(0).getString(2) == "Document 1: Text length (0) below minimum (1)")
+    assert(out(0).getString(3) == "text_too_short")
+    assert(out(1).isNullAt(1) && out(1).isNullAt(2) && out(1).isNullAt(3))
+    assert(engine.embedDocuments(df).collect().map(_.doc_id).toSeq == Seq(2L))
+  }
+
   test("Observation metrics: one-pass side-channel counters, no second scan") {
     // the Spark-native form of the reference's REQUEST_COUNT-style
     // counters for batch plans: metrics ride the action that already

@@ -111,30 +111,4 @@ class Round16Spec extends AnyFunSuite {
     assert(partd.nonEmpty,
       "q_heaps_law's doc-level running sums must be bucket-PARTITIONED")
   }
-
-  test("streaming floor fence fires on an injected slowdown and stays " +
-      "silent on the recorded band (r15 VERDICT ask #7)") {
-    // silent: every recorded gate measured exactly AT its floor
-    val atFloor = Bench.recordedFloors.toSeq
-      .map { case (g, f) => g -> (4L, f * 4) }
-    assert(Bench.floorBreaches(atFloor).isEmpty,
-      "measuring at the recorded floor must never breach")
-    // silent just under the fence (1.99× the floor)
-    assert(Bench.floorBreaches(
-      Seq("events_stream_tumbling" -> (2L, 1.00 * 2 * 1.99))).isEmpty)
-    // FIRES on injected slowdowns; a gate with no recorded floor never
-    // fires (new gates get a floor at the next re-band, not a red run)
-    val breaches = Bench.floorBreaches(Seq(
-      "events_stream_tumbling" -> (2L, 1.00 * 2 * 2.2),
-      "docs_stream_kmv" -> (3L, 1.685 * 3 * 5.0),
-      "q_gate_without_recorded_floor" -> (3L, 99.0)))
-    assert(breaches.map(_._1).toSet ==
-      Set("events_stream_tumbling", "docs_stream_kmv"))
-    val t = breaches.find(_._1 == "events_stream_tumbling").get
-    assert(math.abs(t._2 - 2.2) < 1e-9 && t._3 == 1.00,
-      s"breach must carry (measured sec/batch, recorded floor): $t")
-    // a zero-batch drain must never divide (or fire)
-    assert(Bench.floorBreaches(
-      Seq("events_stream_dedup" -> (0L, 9.9))).isEmpty)
-  }
 }

@@ -8,10 +8,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.WindowExecBase
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-17 specs: the ambient-normalized streaming floor fence
-  * (r16 VERDICT ask #5) and the de-single-partitioned
-  * q_roc_auc / q_weighted_median / q_ngram_coverage / q_skew_audit
-  * plans (asks #3/#4).
+/** Round-17 specs: the de-single-partitioned q_roc_auc /
+  * q_weighted_median / q_ngram_coverage / q_skew_audit plans (r16 VERDICT
+  * asks #3/#4) and the self-disabling fanout.
   */
 class Round17Spec extends AnyFunSuite {
 
@@ -41,53 +40,6 @@ class Round17Spec extends AnyFunSuite {
       case a: AdaptiveSparkPlanExec => (a: SparkPlan) +: allNodes(a.inputPlan)
       case n => Seq(n)
     }
-
-  test("floor fence normalized by the ambient calibration probe: silent " +
-      "on a uniformly CPU-throttled run of unchanged code, loud on a " +
-      "structural regression at calm ambient (r16 VERDICT ask #5)") {
-    // A throttled host slows every gate AND the calibration probe by
-    // the same ambient factor. Simulate a 1.6×-contended session: all
-    // measured sec/batch at 1.6× their recorded floor... times the
-    // pre-existing in-band margin (floors are measured at ~1×, gates
-    // drift to ~1.4× within a healthy band — r16's false breaches were
-    // 1.4×-band gates pushed past 2.0 by ambient alone).
-    val throttled = Bench.recordedFloors.toSeq.map { case (g, f) =>
-      g -> (4L, f * 4 * 1.4 * 1.6) // in-band 1.4× floor, throttled 1.6×
-    }
-    // un-normalized fence (the r16 behavior): cries wolf
-    assert(Bench.floorBreaches(throttled).nonEmpty,
-      "sanity: 2.24× the floor breaches the raw 2.0× fence")
-    // ambient-normalized fence: probe/baseline = 1.6 stretches the
-    // factor to 3.2 and the same measurements stay silent
-    val scaled = Bench.FloorFenceFactor * 1.6
-    assert(Bench.floorBreaches(throttled, factor = scaled).isEmpty,
-      "uniform ambient slowdown must not breach the normalized fence")
-    // a STRUCTURAL regression (one gate at 2.4× its floor, calm
-    // ambient = scale 1.0) still fires, and only for that gate
-    val structural = Seq(
-      "events_stream_tumbling" -> (2L, 1.00 * 2 * 2.4),
-      "events_stream_dedup" -> (2L, 0.975 * 2 * 1.3))
-    val fired = Bench.floorBreaches(structural,
-      factor = Bench.FloorFenceFactor * 1.0)
-    assert(fired.map(_._1) == Seq("events_stream_tumbling"),
-      s"structural 2.4× must fire alone at calm ambient: $fired")
-    // ...and even under mild contention (1.1×) a hard structural
-    // regression (4×) still fires through the stretched fence
-    assert(Bench.floorBreaches(
-      Seq("events_stream_tumbling" -> (2L, 1.00 * 2 * 4.0)),
-      factor = Bench.FloorFenceFactor * 1.1).nonEmpty)
-  }
-
-  test("calibration probe is positive, finite and repeatable within a " +
-      "same-JVM session") {
-    val a = Bench.calibrationProbeSec(reps = 3)
-    val b = Bench.calibrationProbeSec(reps = 3)
-    assert(a > 0 && b > 0 && a.isFinite && b.isFinite)
-    // same JVM, seconds apart: the two medians must agree within the
-    // ambient band (generous 3× — this is a smoke bound, not a bench)
-    assert(math.max(a, b) / math.min(a, b) < 3.0,
-      s"calibration probe unstable: $a vs $b")
-  }
 
   test("q_roc_auc / q_weighted_median / q_skew_audit run their domain " +
       "windows PARTITIONED (bucketed prefix-sum recipe, r16 VERDICT " +
