@@ -178,22 +178,29 @@ class InceptionEngine(
     * frame carries `idCol`, a per-document `error` message in the
     * reference's exact format ("Document {id}: Text length (…) below
     * minimum (…)", utils.py:97-116) so a batch user can find the bad row.
-    * Callers split on `error_type`; [[embedDocuments]] drops invalid rows
-    * (the reference fails the whole batch on the first bad doc,
-    * routes/embedding.py:113-115 — a DataFrame engine routes instead,
-    * SURVEY.md §2.1 O1). Each invalid row increments ERROR_COUNT.
+    * With `idCol`, a row whose id is null or not an integer is a
+    * `validation_error` ([[Validation.InvalidIdMessage]]) before any text
+    * check. Callers split on `error_type`; [[embedDocuments]] drops
+    * invalid rows (the reference fails the whole batch on the first bad
+    * doc, routes/embedding.py:113-115 — a DataFrame engine routes
+    * instead, SURVEY.md §2.1 O1). Each invalid row increments ERROR_COUNT.
     */
   def withValidation(
       df: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    val base = df.withColumn("error_type",
-      countedErrors("batch", textErrorType(col(textCol))))
-    if (df.columns.contains(idCol))
-      base.withColumn("error",
-        Validation.textErrorMessage(col(idCol), col(textCol), conf))
-    else base
+    val textType = textErrorType(col(textCol))
+    if (!df.columns.contains(idCol))
+      df.withColumn("error_type", countedErrors("batch", textType))
+    else {
+      val badId = col(idCol).try_cast(LongType).isNull
+      df.withColumn("error_type", countedErrors("batch",
+          when(badId, Validation.ValidationError.label).otherwise(textType)))
+        .withColumn("error",
+          when(badId, lit(Validation.InvalidIdMessage)).otherwise(
+            Validation.textErrorMessage(col(idCol), col(textCol), conf)))
+    }
   }
 
   /** Binary→string decode with UTF-8 validation — the reference's
@@ -262,6 +269,9 @@ class InceptionEngine(
     * per-document work on [[InceptionEngine.fanOutWidth]] threads, in
     * input order (see the scale design notes).
     *
+    * A null or non-integer id drops the row like any invalid one (see
+    * [[withValidation]]) instead of failing the job.
+    *
     * Duplicate ids: the reference silently last-wins via dict build
     * (routes/embedding.py:117); with no row order in a DataFrame we keep
     * one arbitrary-but-deterministic row per id via max(text) when
@@ -279,7 +289,7 @@ class InceptionEngine(
     val ov = conf.numOverlapSentences
     val batchSize = conf.processingBatchSize
     val base0 = df.select(
-      col(idCol).cast(LongType).as("doc_id"),
+      col(idCol).try_cast(LongType).as("doc_id"),
       col(textCol).as("text")
     )
     val base =

@@ -15,9 +15,17 @@ import graft.text.TextCleaner
   *   - `text_too_short`  (utils.py:96-103)
   *   - `text_too_long` / `query_too_long` (utils.py:105-116)
   *   - `validation_error` — empty after cleaning (utils.py:73-81 via
-  *     handle_exception's ValueError branch, utils.py:133-140)
+  *     handle_exception's ValueError branch, utils.py:133-140), and a
+  *     document whose id is null or not an integer, with the fixed
+  *     `error` [[InvalidIdMessage]] (the reference's 422 for a non-int
+  *     `TextRequest.id`, schemas.py:4-15)
   *   - `decode_error`, `gpu_error`, `processing_error` — the remaining
   *     branches of utils.py:119-157, surfaced for API completeness.
+  *
+  * Every length check is [[TextCleaner.strippedLength]], the one scalar
+  * walk, lifted into Column expressions as a named UDF; null text counts
+  * as length 0. The document endpoints' `error_type` is a single UDF
+  * call per row, so a filter on it measures each document once.
   */
 object Validation {
 
@@ -30,19 +38,27 @@ object Validation {
   case object GpuError extends EngineError { val label = "gpu_error" }
   case object ProcessingError extends EngineError { val label = "processing_error" }
 
-  /** Stripped length, null `text` as 0: too short, not valid (ref `text: str`). */
-  private def strippedLength(text: Column): Column =
-    coalesce(TextCleaner.strippedLength(text), lit(0))
+  /** The `error` of a row routed to `validation_error` because its id is
+    * null or does not cast to a long.
+    */
+  val InvalidIdMessage = "Document id must be an integer"
 
   /** `error_type` expression for the document/batch endpoints
     * (`endpoint != "query"`: max = maxTextLength, label "text_too_long",
-    * utils.py:105-110). Null when valid.
+    * utils.py:105-110). Null when valid. One opaque UDF call
+    * (`graft_text_error_type`) that measures the text once: written as a
+    * CASE over the length, the optimizer copies the length into each
+    * branch of a filter on it.
     */
   def textErrorType(text: Column, conf: EngineConfig): Column = {
-    val len = strippedLength(text)
-    when(len < conf.minTextLength, TextTooShort.label)
-      .when(len > conf.maxTextLength, TextTooLong.label)
-      .otherwise(lit(null: String))
+    val min = conf.minTextLength
+    val max = conf.maxTextLength
+    udf { (t: String) =>
+      val len = TextCleaner.strippedLength(t)
+      if (len < min) TextTooShort.label
+      else if (len > max) TextTooLong.label
+      else null
+    }.withName("graft_text_error_type")(text)
   }
 
   /** `error_type` expression for the query endpoint (max = maxQueryLength,
@@ -51,7 +67,7 @@ object Validation {
     * (embedding_service.py:156).
     */
   def queryErrorType(text: Column, conf: EngineConfig): Column = {
-    val len = strippedLength(text)
+    val len = TextCleaner.strippedLength(text)
     when(len < conf.minTextLength, TextTooShort.label)
       .when(len > conf.maxQueryLength, QueryTooLong.label)
       .when(
@@ -68,7 +84,7 @@ object Validation {
     * Null when valid.
     */
   def textErrorMessage(id: Column, text: Column, conf: EngineConfig): Column = {
-    val len = strippedLength(text)
+    val len = TextCleaner.strippedLength(text)
     when(len < conf.minTextLength,
       concat(lit("Document "), id.cast("string"),
         lit(": Text length ("), len.cast("string"),
@@ -90,9 +106,8 @@ object Validation {
       metrics: Option[Metrics] = None,
       endpoint: String = "query"
   ): Unit = {
-    // null behaves like the DataFrame paths (Option(text).getOrElse("")):
-    // empty → text_too_short through the validation error path, not an NPE
-    val len = TextCleaner.strippedLength(Option(text).getOrElse(""))
+    // null measures 0 like the DataFrame paths: text_too_short, not an NPE
+    val len = TextCleaner.strippedLength(text)
     if (len < conf.minTextLength) {
       metrics.foreach(_.errorCount(endpoint, TextTooShort.label).add(1L))
       throw new IllegalArgumentException(

@@ -59,26 +59,25 @@ object TextCleaner {
   }
 
   /** Whitespace-insensitive trimmed length used by O1 validation
-    * (utils.py:95 `len(text.strip())`): the length, in code points, of
-    * `trim(text, UnicodeWhiteSpace)`. Python's strip() removes UNICODE
-    * whitespace — Java's bare `\s` is ASCII-only and would accept a doc
-    * padded with NBSP/ideographic space that the reference rejects — so
-    * the trim set is the JDK White_Space set [[UnicodeWhiteSpace]]. The
-    * DuckDB oracle mirrors it as the RE2 class `[\s\p{Z}\x{0B}\x{85}]`,
-    * which covers the same code points (U+000B is spelled out because
-    * RE2's `\s` has no `\v`).
-    * A character-set trim, not a regex: this runs over every full
-    * document, and an unanchored `(?U)^\s+|\s+$` tries a match at every
-    * position. Codegen'd, no UDF.
-    */
-  def strippedLength(text: Column): Column =
-    length(trim(text, UnicodeWhiteSpace))
-
-  /** Scalar twin of the Column [[strippedLength]] for the single-query
-    * path: same [[UnicodeWhiteSpace]] set, length in code points like
-    * Spark's `length` and Python's `len`. CleanerSpec asserts they agree.
+    * (utils.py:95 `len(text.strip())`): the length, in code points like
+    * Spark's `length` and Python's `len`, of `text` with leading and
+    * trailing [[UnicodeWhiteSpace]] removed; null counts as 0, so a null
+    * text is too short rather than valid (the reference requires
+    * `text: str`). Python's strip() removes UNICODE whitespace — Java's
+    * bare `\s` is ASCII-only and would accept a doc padded with
+    * NBSP/ideographic space that the reference rejects — so the set is
+    * the JDK White_Space set. The DuckDB oracle mirrors it as the RE2
+    * class `[\s\p{Z}\x{0B}\x{85}]`, which covers the same code points
+    * (U+000B is spelled out because RE2's `\s` has no `\v`).
+    *
+    * The one strip-length implementation: the Column form below calls
+    * this function. It walks inward from both ends over the whitespace
+    * and counts the code points between in one pass, with no allocation
+    * and no regex (an unanchored `(?U)^\s+|\s+$` tries a match at every
+    * position).
     */
   def strippedLength(text: String): Int = {
+    if (text == null) return 0
     // the set is all BMP, so a surrogate half is never stripped
     var s = 0
     var e = text.length
@@ -86,6 +85,17 @@ object TextCleaner {
     while (e > s && UnicodeWhiteSpace.indexOf(text.charAt(e - 1)) >= 0) e -= 1
     text.codePointCount(s, e)
   }
+
+  /** [[strippedLength]] on a Column: one named, deterministic UDF
+    * (`graft_stripped_length`) over the scalar walk. Spark hands it the
+    * decoded Java String, so a string holding invalid UTF-8 (a binary
+    * cast) never throws: each malformed sequence decodes to U+FFFD and
+    * the length is that of the decoded String.
+    */
+  def strippedLength(text: Column): Column = strippedLengthUdf(text)
+
+  private val strippedLengthUdf =
+    udf((t: String) => strippedLength(t)).withName("graft_stripped_length")
 
   /** Plain-Scala twin of [[cleanTextForJson]] for pure-function call sites
     * (chunker tests, single-query path). Kept in lockstep with the Column

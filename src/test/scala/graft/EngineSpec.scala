@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.EngineConfig
-import graft.engine.InceptionEngine
+import graft.engine.{InceptionEngine, Validation}
 import graft.text.{Chunker, TextCleaner}
 
 /** DataFrame-level engine tests: endpoint shapes (reference
@@ -277,6 +277,25 @@ class EngineSpec extends AnyFunSuite {
     assert(out(0).getString(3) == "text_too_short")
     assert(out(1).isNullAt(1) && out(1).isNullAt(2) && out(1).isNullAt(3))
     assert(engine.embedDocuments(df).collect().map(_.doc_id).toSeq == Seq(2L))
+  }
+
+  test("null or non-integer doc_id routes to validation_error instead of failing the job") {
+    import spark.implicits._
+    val df = Seq[(String, String)](
+      (null, "a valid text"), ("abc", "another valid text"), ("3", "third text"))
+      .toDF("doc_id", "text")
+    val out = engine.withValidation(df)
+      .select("doc_id", "error_type", "error").collect()
+      .map(r => Option(r.getString(0)) ->
+        ((Option(r.getString(1)), Option(r.getString(2)))))
+      .toMap
+    val bad = (Some("validation_error"), Some(Validation.InvalidIdMessage))
+    assert(out(None) == bad)
+    assert(out(Some("abc")) == bad)
+    assert(out(Some("3")) == ((None, None)))
+    val docs = engine.embedDocuments(df).collect()
+    assert(docs.map(_.doc_id).toSeq == Seq(3L))
+    assert(docs.head.embeddings.nonEmpty)
   }
 
   test("Observation metrics: one-pass side-channel counters, no second scan") {

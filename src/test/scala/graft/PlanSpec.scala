@@ -130,9 +130,28 @@ class PlanSpec extends AnyFunSuite {
     val plan = engine
       .embedDocuments(spark.read.parquet(s"$sf/documents.parquet"))
       .queryExecution.executedPlan.toString
-    // the length check is present, as a character-set trim
-    assert(plan.contains("trim("), plan)
+    // the length check is present, as the scalar walk's UDF
+    assert(plan.contains("graft_text_error_type("), plan)
+    assert(!plan.contains("trim("), plan)
     assert(!plan.contains("regexp_replace"), s"regex in the flagship plan:\n$plan")
+  }
+
+  test("flagship validation measures each document once") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF, StringTrim}
+    import org.apache.spark.sql.execution.DataSourceScanExec
+    val engine = new graft.engine.InceptionEngine()
+    val plan = engine
+      .embedDocuments(spark.read.parquet(s"$sf/documents.parquet"))
+      .queryExecution.executedPlan
+    val lengthUdfs = Set("graft_text_error_type", "graft_stripped_length")
+    // evaluated expressions only: a scan node repeats its data filters
+    val measures = plan.collect {
+      case p if !p.isInstanceOf[DataSourceScanExec] => p.expressions
+    }.flatten.flatMap(_.collect {
+      case u: ScalaUDF if u.udfName.exists(lengthUdfs) => u: Expression
+      case t: StringTrim => t
+    })
+    assert(measures.size == 1, s"${measures.size} length measures in:\n$plan")
   }
 
   test("pre-partitioned equi-join reuses the partitioning (no third exchange)") {
