@@ -14,10 +14,6 @@ import graft.functions.CosineSimilarity
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
   *   ...
   * }}}
-  *
-  * UDF-backed functions (sentence split, chunker, embedder) are
-  * session-state-bound and registered per-session via
-  * `InceptionEngine.registerFunctions` instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

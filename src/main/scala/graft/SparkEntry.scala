@@ -7,32 +7,25 @@ import org.apache.spark.sql.functions._
 import graft.config.EngineConfig
 import graft.engine.InceptionEngine
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Analytics gate entry object (SURVEY.md §7), being deleted in stages
+  * (ROADMAP item 3).
   *
   * Each `queries` entry is one operator from SURVEY.md §2 (parity pipeline
   * over `documents`) or a relational/extension operator over the TPC-H-ish
-  * tables. Every SQL-expressible query has a DuckDB twin in `oracleSql`
-  * with IDENTICAL output column names and ordering.
+  * tables.
   *
-  * Determinism rules used throughout (so t2 hash-compare is stable):
+  * Determinism rules used throughout (results hash-identically across
+  * cluster layouts):
   *   - double aggregates accumulate via exact DECIMAL then cast to double
-  *     (associativity-proof — Spark partial aggregation order differs from
-  *     DuckDB's);
-  *   - timestamps are emitted as epoch microseconds (bigint) — parquet
-  *     nanos (DuckDB) vs micros (Spark) would otherwise hash-differ;
+  *     (associativity-proof under any partial-aggregation order);
+  *   - timestamps are emitted as epoch microseconds (bigint);
   *   - every query ends in a total ORDER BY on a unique key.
   */
 object SparkEntry
     extends SparkEntryParity
     with SparkEntryTextDedup
     with SparkEntryRelational
-    with SparkEntryEvalDrift
-    with SparkEntryStatTests
-    with SparkEntryStatBatteries
-    with SparkEntryOracleCore
-    with SparkEntryOracleA
-    with SparkEntryOracleB
-    with SparkEntryOracleC {
+    with SparkEntryStatBatteries {
 
   private[graft] val engine = new InceptionEngine(EngineConfig.default)
 
@@ -40,7 +33,7 @@ object SparkEntry
     * SparkSession so accumulators register against the right context.
     * Endpoint-shaped queries run through this engine, so REQUEST_COUNT /
     * CHUNK_COUNT / ERROR_COUNT / PROCESSING_TIME accumulate during the
-    * verify and bench runs exactly as the reference's Prometheus counters
+    * gate runs exactly as the reference's Prometheus counters
     * accumulate in serving.
     */
   // WEAK keys: a strong SparkSession-keyed cache would retain every
@@ -108,19 +101,17 @@ object SparkEntry
     * HALF_UPs the decimal rendering; DuckDB nearbyints the scaled
     * product, with tie behavior that has differed across DuckDB
     * versions — the r12/r13 red-row class). Used for every readout
-    * tools/round_audit.py found tie-sensitive at sf0.01, mirrored
-    * VERBATIM as floor((x)*1eK + 0.5)/1eK in the oracle SQL; see
-    * BASELINE.md "rounding determinism".
+    * found tie-sensitive at sf0.01; see BASELINE.md "rounding
+    * determinism".
     */
   private[graft] def rndDet(c: Column, k: Int): Column = {
     val s = math.pow(10, k)
     floor(c * lit(s) + lit(0.5d)) / lit(s)
   }
 
-  /** Canonical word tokenization shared by the text-corpus queries and
-    * mirrored verbatim in their DuckDB oracles: lowercase, split on
-    * non-[a-z0-9_] runs, drop empties. One definition — a tokenization
-    * change must touch exactly here plus the oracle strings.
+  /** Canonical word tokenization shared by the text-corpus queries:
+    * lowercase, split on non-[a-z0-9_] runs, drop empties. One
+    * definition — a tokenization change must touch exactly here.
     */
   private[graft] val tokensSql =
     "filter(split(lower(text), '[^a-z0-9_]+'), w -> w <> '')"
@@ -186,80 +177,6 @@ object SparkEntry
     "q_skyline" -> qSkyline,
     "q_conversion_lag" -> qConversionLag,
     "q_ab_lift" -> qAbLift,
-    "q_linreg" -> qLinreg,
-    "q_roc_auc" -> qRocAuc,
-    "q_confusion" -> qConfusion,
-    "q_calibration" -> qCalibration,
-    "q_jaro_dedup" -> qJaroDedup,
-    "q_repeat_ladder" -> qRepeatLadder,
-    "q_catalog_coverage" -> qCatalogCoverage,
-    "q_forecast_baseline" -> qForecastBaseline,
-    "q_rolling_anomaly" -> qRollingAnomaly,
-    "q_novelty_rate" -> qNoveltyRate,
-    "q_revenue_decomposition" -> qRevenueDecomposition,
-    "q_runs_test" -> qRunsTest,
-    "q_dp_counts" -> qDpCounts,
-    "q_ab_srm" -> qAbSrm,
-    "q_pit_features" -> qPitFeatures,
-    "q_horizon_label" -> qHorizonLabel,
-    "q_lsh_curve" -> qLshCurve,
-    "q_rolling_corr" -> qRollingCorr,
-    "q_iqr_fence" -> qIqrFence,
-    "q_ess" -> qEss,
-    "q_dataset_card" -> qDatasetCard,
-    "q_growth_accounting" -> qGrowthAccounting,
-    "q_event_near_dup" -> qEventNearDup,
-    "q_session_conversion" -> qSessionConversion,
-    "q_dedup_attribution" -> qDedupAttribution,
-    "q_zipf_fit" -> qZipfFit,
-    "q_heaps_law" -> qHeapsLaw,
-    "q_lang_confusion" -> qLangConfusion,
-    "q_stopword_discovery" -> qStopwordDiscovery,
-    "q_basket_rules" -> qBasketRules,
-    "q_trend_by_group" -> qTrendByGroup,
-    "q_bootstrap_ci" -> qBootstrapCi,
-    "q_group_auc" -> qGroupAuc,
-    "q_gains_table" -> qGainsTable,
-    "q_corr_matrix" -> qCorrMatrix,
-    "q_weighted_median" -> qWeightedMedian,
-    "q_price_index" -> qPriceIndex,
-    "q_session_path" -> qSessionPath,
-    "q_survival" -> qSurvival,
-    "q_lorenz" -> qLorenz,
-    "q_ks_test" -> qKsTest,
-    "q_mann_whitney" -> qMannWhitney,
-    "q_did" -> qDid,
-    "events_stream_ohlc" -> qEventsStreamOhlc,
-    "q_component_sizes" -> qComponentSizes,
-    "q_ohlc" -> qOhlc,
-    "q_l_diversity" -> qLDiversity,
-    "q_fk_violations" -> qFkViolations,
-    "q_concurrency" -> qConcurrency,
-    "q_random_projection" -> qRandomProjection,
-    "q_table_cdf" -> qTableCdf,
-    "q_mv_incremental" -> qMvIncremental,
-    "q_cohort_ltv" -> qCohortLtv,
-    "q_order_gaps" -> qOrderGaps,
-    "q_seasonality" -> qSeasonality,
-    "q_autocorr" -> qAutocorr,
-    "q_changepoint" -> qChangepoint,
-    "q_hits" -> qHits,
-    "q_degree_stats" -> qDegreeStats,
-    "q_link_predict" -> qLinkPredict,
-    "q_chi_square" -> qChiSquare,
-    "q_target_encoding" -> qTargetEncoding,
-    "q_bigram_lm" -> qBigramLm,
-    "q_containment" -> qContainment,
-    "q_winsorize" -> qWinsorize,
-    "q_golden_record" -> qGoldenRecord,
-    "q_entropy" -> qEntropy,
-    "q_rfm" -> qRfm,
-    "q_dau_mau" -> qDauMau,
-    "q_ttr" -> qTtr,
-    "q_markov" -> qMarkov,
-    "q_item_cooccur" -> qItemCooccur,
-    "q_shortest_path" -> qShortestPath,
-    "q_benford" -> qBenford,
     "q_twap" -> qTwap,
     "q_asof_join_native" -> qAsofJoinNative,
     "q_centroids" -> qCentroids,
@@ -364,17 +281,9 @@ object SparkEntry
     "q_boilerplate" -> qBoilerplate,
     "q_scd2" -> qScd2,
     "q_attribution" -> qAttribution,
-    "q_markov_attribution" -> qMarkovAttribution,
-    "q_mixture_raking" -> qMixtureRaking,
-    "q_asof_nearest" -> qAsofNearest,
-    "q_kneser_ney" -> qKneserNey,
-    "q_nelson_aalen" -> qNelsonAalen,
-    "q_lev_block_dedup" -> qLevBlockDedup,
-    "q_seq_patterns" -> qSeqPatterns,
     "q21_waiting" -> qQ21Waiting,
     "q12_priority" -> qQ12Priority,
     "q20_excess" -> qQ20Excess,
-    "q_graph_robustness" -> qGraphRobustness,
     "q_table_restore" -> qTableRestore,
     "q_table_sql_delete" -> qTableSqlDelete,
     "q_table_sql_update" -> qTableSqlUpdate,
@@ -462,57 +371,8 @@ object SparkEntry
     "q_table_stream_sink" -> qTableStreamSink,
     "q_table_stream_evolve" -> qTableStreamEvolve,
     "q_table_sql_history" -> qTableSqlHistory,
-    "q_mrr_eval" -> qMrrEval,
-    "q_map_eval" -> qMapEval,
-    "q_eigencentrality" -> qEigenCentrality,
-    "q_eig_dbg_edges" -> qEigDbgEdges,
-    "q_eig_dbg_w1" -> qEigDbgW(0) _,
-    "q_eig_dbg_w4" -> qEigDbgW(3) _,
-    "q_emb_dbg_raw" -> qEmbDbg(false) _,
-    "q_emb_dbg_sq" -> qEmbDbg(true) _,
-    "q_v_measure" -> qVMeasure,
-    "q_gwet_ac1" -> qGwetAc1,
-    "q_theta_forecast" -> qThetaForecast,
-    "q_mase_eval" -> qMaseEval,
-    "q_kendall_w" -> qKendallW,
-    "q_ad_test" -> qAdTest,
-    "q_good_turing" -> qGoodTuring,
-    "q_chao1" -> qChao1,
-    "q_hellinger" -> qHellinger,
-    "q_holt_winters" -> qHoltWinters,
-    "q_krippendorff" -> qKrippendorff,
-    "q_yule_k" -> qYuleK,
-    "q_emb_isotropy" -> qEmbIsotropy,
-    "q_mutual_info" -> qMutualInfo,
-    "q_rbo_eval" -> qRboEval,
-    "q_distinct_ngrams" -> qDistinctNgrams,
-    "q_dup_size_hist" -> qDupSizeHist,
-    "q_cusum_drift" -> qCusumDrift,
-    "q_page_hinkley" -> qPageHinkley,
-    "q_gini_sources" -> qGiniSources,
-    "q_herfindahl" -> qHerfindahl,
-    "q_jaccard_linkpred" -> qJaccardLinkpred,
-    "q_fleiss_kappa" -> qFleissKappa,
-    "q_bradley_terry" -> qBradleyTerry,
-    "q_emb_norm_stats" -> qEmbNormStats,
-    "q_ndcg_eval" -> qNdcgEval,
-    "q_hill_tail" -> qHillTail,
     "q_table_stream_agg" -> qTableStreamAgg,
     "q_table_timetravel_ts" -> qTableTimetravelTs,
-    "q_table_maintenance" -> qTableMaintenance,
-    "q_table_sql_maintenance" -> qTableSqlMaintenance,
-    "q_table_merge_evolve" -> qTableMergeEvolve,
-    "q_table_sql_constraint" -> qTableSqlConstraint,
-    "q_table_sql_zorder" -> qTableSqlZorder,
-    "q_table_sql_files" -> qTableSqlFiles,
-    "q_table_identity_partition" -> qTableIdentityPartition,
-    "q_table_partition_retention" -> qTablePartitionRetention,
-    "q_table_multicol_partition" -> qTableMulticolPartition,
-    "q_table_show_partitions2" -> qTableShowPartitions2,
-    "q_table_partition_evolve" -> qTablePartitionEvolve,
-    "q_table_dyn_overwrite" -> qTableDynOverwrite,
-    "q_table_partition_lifecycle" -> qTablePartitionLifecycle,
-    "q_table_show_partitions" -> qTableShowPartitions,
     "q_embed_dim_stats" -> qEmbedDimStats,
     "q_pca_project" -> qPcaProject,
     "q_collocations" -> qCollocations,
@@ -531,7 +391,6 @@ object SparkEntry
     "q_min_cost_supplier" -> qMinCostSupplier,
     "q_revenue_view" -> qRevenueView,
     "q_small_order_revenue" -> qSmallOrderRevenue,
-    "orders_stream_merge" -> qOrdersStreamMerge,
     "q_islands" -> qIslands,
     "q_heavy_hitters" -> qHeavyHitters,
     "q_rel_division" -> qRelDivision,
@@ -542,75 +401,6 @@ object SparkEntry
     "q_domain_cap" -> qDomainCap,
     "q_triangle_count" -> qTriangleCount,
     "q_k_anonymity" -> qKAnonymity,
-    "q_table_dsv2" -> qTableDsv2,
-    "q_welch_ttest" -> qWelchTtest,
-    "q_anova" -> qAnova,
-    "q_info_gain" -> qInfoGain,
-    "q_mode" -> qMode,
-    "q_decision_stump" -> qDecisionStump,
-    "q_ewma" -> qEwma,
-    "q_cum_distinct" -> qCumDistinct,
-    "q_seasonal_decompose" -> qSeasonalDecompose,
-    "q_theil_sen" -> qTheilSen,
-    "q_unigram_kl" -> qUnigramKl,
-    "q_tokenizer_fertility" -> qTokenizerFertility,
-    "q_naive_bayes" -> qNaiveBayes,
-    "q_t_closeness" -> qTCloseness,
-    "q_label_propagation" -> qLabelPropagation,
-    "q_haversine_nn" -> qHaversineNn,
-    "q_cosine_histogram" -> qCosineHistogram,
-    "q_mmr_diversify" -> qMmrDiversify,
-    "q_modularity" -> qModularity,
-    "q_assortativity" -> qAssortativity,
-    "q_pattern_vshape" -> qPatternVshape,
-    "q_pattern_doubletop" -> qPatternDoubletop,
-    "q_clustering_coeff" -> qClusteringCoeff,
-    "q_kcore" -> qKcore,
-    "q_mann_kendall" -> qMannKendall,
-    "q_bollinger" -> qBollinger,
-    "q_rsi" -> qRsi,
-    "q_sax" -> qSax,
-    "q_simpson" -> qSimpson,
-    "q_burstiness" -> qBurstiness,
-    "q_price_elasticity" -> qPriceElasticity,
-    "q_cuped" -> qCuped,
-    "q_sprt" -> qSprt,
-    "q_vec_outlier" -> qVecOutlier,
-    "q_levene" -> qLevene,
-    "q_readability" -> qReadability,
-    "q_bm25_query" -> qBm25Query,
-    "q_partial_corr" -> qPartialCorr,
-    "q_var_cvar" -> qVarCvar,
-    "q_grubbs" -> qGrubbs,
-    "q_durbin_watson" -> qDurbinWatson,
-    "q_jarque_bera" -> qJarqueBera,
-    "multimodal_phash" -> qMultimodalPhash,
-    "q_spearman" -> qSpearman,
-    "q_cronbach" -> qCronbach,
-    "q_renyi" -> qRenyi,
-    "q_ngram_coverage" -> qNgramCoverage,
-    "q_odds_ratio" -> qOddsRatio,
-    "q_source_repetition" -> qSourceRepetition,
-    "q_hhi" -> qHhi,
-    "q_cohen_kappa" -> qCohenKappa,
-    "q_countmin" -> qCountMin,
-    "q_psm_att" -> qPsmAtt,
-    "q_adf_test" -> qAdfTest,
-    "q_granger" -> qGranger,
-    "q_ljung_box" -> qLjungBox,
-    "q_hurst" -> qHurst,
-    "q_bloom_join" -> qBloomJoin,
-    "q_ams_f2" -> qAmsF2,
-    "q_bh_fdr" -> qBhFdr,
-    "q_power_mde" -> qPowerMde,
-    "q_kruskal_wallis" -> qKruskalWallis,
-    "q_mcnemar" -> qMcnemar,
-    "q_kendall_tau" -> qKendallTau,
-    "q_theil_index" -> qTheilIndex,
-    "q_jsd" -> qJsd,
-    "q_burrows_delta" -> qBurrowsDelta,
-    "q_xcorr" -> qXcorr,
-    "q_isotonic" -> qIsotonic,
     "q_quantile_sketch" -> qQuantileSketch,
     "q_log_rank" -> qLogRank,
     "q_wilcoxon_signed" -> qWilcoxonSigned,
@@ -669,16 +459,6 @@ object SparkEntry
     "q_median_polish" -> qMedianPolish,
     "q_seasonal_mk" -> qSeasonalMk,
     "q_hoover" -> qHoover,
-    "q_palma" -> qPalma,
-    "q_skew_audit" -> qSkewAudit,
-    "q_tfidf_cosine_pairs" -> qTfidfCosinePairs,
-    "q_diversity_index" -> qDiversityIndex,
-    "q_drawdown" -> qDrawdown
+    "q_palma" -> qPalma
   )
-
-  /** DuckDB twins, one per SQL-expressible `queries` entry —
-    * assembled from the three slice traits (keys disjoint).
-    */
-  def oracleSql: Map[String, String] =
-    oracleSqlPartA ++ oracleSqlPartB ++ oracleSqlPartC
 }

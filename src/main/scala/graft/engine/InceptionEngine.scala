@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
@@ -129,7 +129,7 @@ class InceptionEngine(
   def queryErrorType(text: Column): Column =
     Validation.queryErrorType(text, conf)
 
-  // ---- UDFs (registered names for SQL callers) ----
+  // ---- UDFs ----
 
   /** O4 as UDF: sentence list. */
   val sentencesUdf =
@@ -140,21 +140,6 @@ class InceptionEngine(
     val mt = conf.maxTokens
     val ov = conf.numOverlapSentences
     udf((text: String) => Chunker.split(Option(text).getOrElse(""), mt, ov))
-  }
-
-  /** O7/O8 kernel as scalar UDF (text must already carry its task prefix).
-    * The model is bound to a local before closure capture so the UDF
-    * ships only the (serializable) model, never the engine + metrics.
-    */
-  val embedUdf = {
-    val mdl = model
-    udf((text: String) => mdl.embed(text))
-  }
-
-  def registerFunctions(spark: SparkSession): Unit = {
-    spark.udf.register("graft_sentences", sentencesUdf)
-    spark.udf.register("graft_chunks", chunksUdf)
-    spark.udf.register("graft_embed", embedUdf)
   }
 
   // ---- Endpoint equivalents ----

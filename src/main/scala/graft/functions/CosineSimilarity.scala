@@ -97,7 +97,7 @@ object CosineSimilarity {
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Column API over the registered function. Caller must have invoked
-    * [[register]] on the session (SparkEntry/GraftExtensions do).
+    * [[register]] on the session (ops/Similarity and GraftExtensions do).
     */
   def cosine(a: Column, b: Column): Column = call_function(name, a, b)
 }

@@ -47,10 +47,9 @@ object ConnectedComponents {
   ): DataFrame = {
     // symmetrize once: propagation below only looks one hop dst→src
     // symmetrize once; eager so the per-round joins plan against
-    // accurate LogicalRDD size stats (r16: an all-lazy variant measured
+    // accurate LogicalRDD size stats (an all-lazy variant measured
     // faster on artifact-edge graphs but 1.5× slower when the edge list
-    // is a live subquery — dedup_clusters/pipeline_e2e — because the
-    // round joins lost their stats; see OPTIMIZATION_r16.md)
+    // is a live subquery, because the round joins lost their stats)
     val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .localCheckpoint(true)
@@ -80,7 +79,7 @@ object ConnectedComponents {
       // hopped self-join then triples the analyzed plan per round —
       // q_graph_robustness measured 2.7× slower. The eager checkpoint
       // does both jobs: truncation for planning and stats for broadcast
-      // planning. See OPTIMIZATION_r16.md.)
+      // planning.)
       val stepped = hopped
         .join(
           hopped.select(col("id").as("hop_comp"),

@@ -147,10 +147,10 @@ object Dedup {
     // margins and doubles signature + explode cost.
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    // (r16 note: a pre-UDF repartition-to-parallelism was tried here and
-    // REVERTED — measured 1.7× slower solo: the kernel's cost is its
-    // stage/bucket structure, not the UDF pass, and the extra exchange
-    // broke downstream reuse. See OPTIMIZATION_r16.md.)
+    // (A pre-UDF repartition-to-parallelism was tried here and REVERTED —
+    // measured 1.7× slower solo: the kernel's cost is its stage/bucket
+    // structure, not the UDF pass, and the extra exchange broke
+    // downstream reuse.)
     // The signature table is consumed three times (banding + both sides of
     // the pair verify join); persist it so shingling/minhashing runs once.
     // At cluster scale the same role is played by writing the signature

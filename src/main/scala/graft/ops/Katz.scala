@@ -49,9 +49,9 @@ object Katz {
       require(nodes.limit(1).count() > 0, "empty graph")
       var x = nodes.select(col("node"),
         expr("CAST(1.0 AS DECIMAL(28,12))").as("x"))
-      // EAGER per-iteration (r16: lazy variant tried and REVERTED —
+      // EAGER per-iteration (a lazy variant was tried and REVERTED —
       // measured 1.14× slower; eager checkpoints keep size stats for
-      // broadcast join planning, see OPTIMIZATION_r16.md)
+      // broadcast join planning)
       for (i <- 1 to iters) {
         val contrib = e
           .join(x.withColumnRenamed("node", "src"), "src")

@@ -41,9 +41,9 @@ object LabelPropagation {
     // Symmetrized ⇒ the src column alone is the full node set, and
     // every node has ≥ 1 neighbor, so the per-iteration argmax always
     // emits every node: no node-preserving outer join needed.
-    // EAGER per-round (r16: the lazy variant was tried and REVERTED —
-    // q_modularity measured 1.3× slower; eager checkpoints keep size
-    // stats for broadcast join planning, see OPTIMIZATION_r16.md)
+    // EAGER per-round (the lazy variant was tried and REVERTED — a
+    // modularity query measured 1.3× slower; eager checkpoints keep size
+    // stats for broadcast join planning)
     var lbl = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint(true)

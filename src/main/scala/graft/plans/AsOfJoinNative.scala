@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.LongType
   *
   * Constraints: key/time columns must be null-free (as-of semantics over
   * nulls are undefined here); time columns must be LongType (the engine's
-  * epoch-micros convention — see SparkEntry "timestamps are emitted as
-  * epoch microseconds").
+  * epoch-micros convention: timestamps flow as integer epoch
+  * microseconds).
   */
 final case class AsOfJoinPlan(
     left: LogicalPlan,

@@ -1641,178 +1641,4 @@ private[graft] trait SparkEntryParity { this: SparkEntry.type =>
       .orderBy(col("adc_dist"), col("vec_id"))
   }
 
-  /** The generated DuckDB replay of [[qVecPq]]: shared hyperplane
-    * chain, then per subspace s (element offset 8·s) the init-bucket,
-    * two (sums → centroids → distances → argmin) rounds, and a final
-    * 8-way join emitting codes + the decimal-summed distortion.
-    */
-  lazy val pqOracles: (String, String, String) = {
-    import Duck.{mix64, rint, toU}
-    val (numPlanes, subDim, m, k) = (4, 8, 8, 16)
-    def foldOff(a: String, off: Int, b: String): String =
-      s"list_reduce(list_transform(range(1, $subDim + 1), " +
-        s"i -> CAST($a[i + $off] AS DOUBLE) * CAST($b[i] AS DOUBLE)), " +
-        "(x, y) -> x + y)"
-    def foldSelfOff(a: String, off: Int): String =
-      s"list_reduce(list_transform(range(1, $subDim + 1), " +
-        s"i -> CAST($a[i + $off] AS DOUBLE) * CAST($a[i + $off] AS DOUBLE)), " +
-        "(x, y) -> x + y)"
-    def foldSelf(a: String): String =
-      s"list_reduce(list_transform(range(1, $subDim + 1), " +
-        s"i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE)), " +
-        "(x, y) -> x + y)"
-    def sub(s: Int): String = {
-      val o = s * subDim
-      def round_(i: Int, prev: String): String =
-        s"""r${i}_$s AS (SELECT b.list_id AS list_id, d.i AS dim,
-               SUM(CAST(${rint(s"CAST(e.embedding[d.i + $o] AS DOUBLE) * 16777216.0")}
-                 AS BIGINT)) AS sm,
-               COUNT(*) AS n
-             FROM embeddings e
-             JOIN $prev b USING (vec_id),
-             range(1, $subDim + 1) d(i)
-             GROUP BY b.list_id, d.i),
-         c${i}_$s AS (SELECT list_id,
-               list(CAST((CAST(sm AS DOUBLE) / n) / 16777216.0 AS REAL)
-                 ORDER BY dim) AS c
-             FROM r${i}_$s GROUP BY list_id),
-         s${i}_$s AS (SELECT e.vec_id, c.list_id,
-               ${foldSelfOff("e.embedding", o)}
-                 - 2.0 * ${foldOff("e.embedding", o, "c.c")}
-                 + ${foldSelf("c.c")} AS d2
-             FROM embeddings e, c${i}_$s c),
-         a${i}_$s AS (SELECT vec_id, list_id, d2 FROM (
-             SELECT vec_id, list_id, d2,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY d2, list_id) AS rn
-             FROM s${i}_$s) WHERE rn = 1)"""
-      s"""a0_$s AS (SELECT e.vec_id,
-               CAST(SUM(CASE WHEN ${foldOff("e.embedding", o, "pl.v")} >= 0
-                   THEN 1 << p ELSE 0 END) AS INTEGER) % $k AS list_id
-             FROM embeddings e, pl GROUP BY e.vec_id),
-         ${round_(1, s"a0_$s")},
-         ${round_(2, s"a1_$s")}"""
-    }
-    val subs = (0 until m).map(sub).mkString(",\n         ")
-    val codes = (0 until m)
-      .map(s => s"CAST(a2_$s.list_id AS VARCHAR)")
-      .mkString(" || '-' || ")
-    val err = (0 until m)
-      .map(s => s"CAST(round(a2_$s.d2, 9) AS DECIMAL(28,9))")
-      .mkString(" + ")
-    val joins = (1 until m)
-      .map(s => s"JOIN a2_$s ON a2_0.vec_id = a2_$s.vec_id")
-      .mkString(" ")
-    val prefix =
-      s"""WITH RECURSIVE chain(p, i, h) AS (
-           SELECT p, 0, ${mix64("19088743 + p")}
-           FROM range(0, $numPlanes) t(p)
-           UNION ALL
-           SELECT p, i + 1, ${mix64("h")} FROM chain WHERE i < $subDim),
-         planes AS (SELECT p, i - 1 AS dim,
-               CAST(CAST((${toU("h")} // 2048) AS DOUBLE)
-                 / 9007199254740992.0 - 0.5 AS REAL) AS pv
-             FROM chain WHERE i >= 1),
-         pl AS (SELECT p, list(pv ORDER BY dim) AS v FROM planes GROUP BY p),
-         $subs"""
-    val main =
-      s"""$prefix
-       SELECT a2_0.vec_id, $codes AS codes,
-         round(CAST(($err) AS DOUBLE), 6) AS err2
-       FROM a2_0 $joins ORDER BY a2_0.vec_id"""
-    // ADC twin: per-subspace LUT of query-to-centroid distances over
-    // the SAME replayed codebooks, summed via the stored assignments.
-    def qFoldOff(off: Int, b: String): String =
-      s"list_reduce(list_transform(range(1, $subDim + 1), " +
-        s"i -> CAST(q.qv[i + $off] AS DOUBLE) * CAST($b[i] AS DOUBLE)), " +
-        "(x, y) -> x + y)"
-    def qFoldSelfOff(off: Int): String =
-      s"list_reduce(list_transform(range(1, $subDim + 1), " +
-        s"i -> CAST(q.qv[i + $off] AS DOUBLE) * CAST(q.qv[i + $off] AS DOUBLE)), " +
-        "(x, y) -> x + y)"
-    val luts = (0 until m).map { s =>
-      val o = s * subDim
-      s"""l_$s AS (SELECT c.list_id,
-             ${qFoldSelfOff(o)} - 2.0 * ${qFoldOff(o, "c.c")}
-               + ${foldSelf("c.c")} AS d
-           FROM c2_$s c CROSS JOIN q)"""
-    }.mkString(",\n         ")
-    val lutJoins = (0 until m)
-      .map(s => s"JOIN l_$s ON a2_$s.list_id = l_$s.list_id")
-      .mkString(" ")
-    val adcSum = (0 until m)
-      .map(s => s"CAST(round(l_$s.d, 9) AS DECIMAL(28,9))")
-      .mkString(" + ")
-    val adc =
-      s"""$prefix,
-         q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         $luts
-       SELECT a2_0.vec_id,
-         round(CAST(($adcSum) AS DOUBLE), 6) AS adc_dist
-       FROM a2_0 $joins $lutJoins
-       ORDER BY adc_dist, a2_0.vec_id LIMIT 10"""
-    // IVF-PQ twin: the composed billion-scale layout — an IVF coarse
-    // layer (the ann_ivf replay, CTEs renamed i_*) prunes candidates to
-    // the query's nProbe lists, then the SAME ADC ranking runs over the
-    // survivors only.
-    val ivfPq = {
-      val (ivfPlanes, ivfProbe) = (3, 3)
-      def fullFold(a: String, b: String): String = Duck.foldDot(a, b, 64)
-      s"""$prefix,
-         q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         $luts,
-         i_chain(p, i, h) AS (
-           SELECT p, 0, ${mix64("19088743 + p")}
-           FROM range(0, $ivfPlanes) t(p)
-           UNION ALL
-           SELECT p, i + 1, ${mix64("h")} FROM i_chain WHERE i < 64),
-         i_planes AS (SELECT p, i - 1 AS dim,
-               CAST(CAST((${toU("h")} // 2048) AS DOUBLE)
-                 / 9007199254740992.0 - 0.5 AS REAL) AS pv
-             FROM i_chain WHERE i >= 1),
-         i_pl AS (SELECT p, list(pv ORDER BY dim) AS v
-             FROM i_planes GROUP BY p),
-         i_init AS (SELECT e.vec_id,
-               CAST(SUM(CASE WHEN ${fullFold("e.embedding", "i_pl.v")} >= 0
-                   THEN 1 << p ELSE 0 END) AS INTEGER) AS list0
-             FROM embeddings e, i_pl GROUP BY e.vec_id),
-         i_rsum AS (SELECT b.list0 AS list_id, d.i AS dim,
-               SUM(CAST(${rint("CAST(e.embedding[d.i] AS DOUBLE) * 16777216.0")}
-                 AS BIGINT)) AS s,
-               COUNT(*) AS n
-             FROM embeddings e
-             JOIN i_init b USING (vec_id),
-             range(1, 65) d(i)
-             GROUP BY b.list0, d.i),
-         i_cl AS (SELECT list_id,
-               list(CAST((CAST(s AS DOUBLE) / n) / 16777216.0 AS REAL)
-                 ORDER BY dim) AS c
-             FROM i_rsum GROUP BY list_id),
-         i_scores AS (SELECT e.vec_id, i_cl.list_id,
-               CASE WHEN ${fullFold("e.embedding", "e.embedding")} = 0
-                      OR ${fullFold("i_cl.c", "i_cl.c")} = 0 THEN 0.0
-                    ELSE ${fullFold("e.embedding", "i_cl.c")}
-                      / sqrt(${fullFold("e.embedding", "e.embedding")}
-                        * ${fullFold("i_cl.c", "i_cl.c")}) END AS cos
-             FROM embeddings e, i_cl),
-         i_assign AS (SELECT vec_id, list_id FROM (
-             SELECT vec_id, list_id,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY cos DESC, list_id) AS rn
-             FROM i_scores) WHERE rn = 1),
-         i_qlists AS (SELECT list_id FROM i_scores WHERE vec_id = 0
-           ORDER BY cos DESC, list_id LIMIT $ivfProbe)
-       SELECT a2_0.vec_id,
-         round(CAST(($adcSum) AS DOUBLE), 6) AS adc_dist
-       FROM a2_0 $joins $lutJoins
-       JOIN i_assign ON a2_0.vec_id = i_assign.vec_id
-       JOIN i_qlists ON i_assign.list_id = i_qlists.list_id
-       ORDER BY adc_dist, a2_0.vec_id LIMIT 10"""
-    }
-    (main, adc, ivfPq)
-  }
-  def vecPqOracleSql: String = pqOracles._1
-  def annPqOracleSql: String = pqOracles._2
-  def annIvfPqOracleSql: String = pqOracles._3
-
 }

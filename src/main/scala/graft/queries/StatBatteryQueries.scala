@@ -16,6 +16,24 @@ import graft.engine.InceptionEngine
   */
 private[graft] trait SparkEntryStatBatteries { this: SparkEntry.type =>
 
+  /** The daily order-revenue series every time-series query in this
+    * family shares: one keyed aggregate to days-sized data (the corpus
+    * never reaches a window), revenue as exact DECIMAL.
+    */
+  def dailyRevenue(s: SparkSession, dir: String): DataFrame =
+    tbl(s, dir, "orders")
+      .select(to_date(col("o_orderdate")).as("day"),
+        col("o_totalprice").cast("decimal(18,2)").as("p"))
+      .groupBy("day").agg(sum(col("p")).as("rev"))
+
+  /** Daily revenue re-quantized to DECIMAL(18,2) so squared terms stay
+    * inside both engines' exact-DECIMAL multiply precision (Spark
+    * (18,2)² → (37,4); DuckDB (18,2)² → (36,4) — a (38,2)² would
+    * overflow DuckDB's 38-digit cap). */
+  def dailyRev18(s: SparkSession, dir: String): DataFrame =
+    dailyRevenue(s, dir)
+      .select(col("day"), col("rev").cast("decimal(18,2)").as("rev"))
+
   // ---- round-10 batch 12: quantile sketch + survival + signed rank ----
 
   /** FIXED-MEMORY QUANTILE SKETCH vs exact: a 256-bucket equi-width

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Distributed micro-batch DELTA LOG — the reusable form of the pattern
-  * every streaming gate in SparkEntry proves: each micro-batch's delta
+/** Distributed micro-batch DELTA LOG — the reusable form of an
+  * idempotent streaming sink: each micro-batch's delta
   * rows are appended BY THE EXECUTORS as parquet part files tagged with
   * the batchId; no result row ever reaches the driver (a driver-side
   * keyed map would grow with key cardinality — window×type cardinality

@@ -37,8 +37,8 @@ object StreamingEmbed {
       }
 
   /** Event-time tumbling aggregation with watermark over an events stream
-    * (ts TIMESTAMP, event_type STRING, value DOUBLE) — the streaming twin
-    * of SparkEntry's events_tumbling batch query.
+    * (ts TIMESTAMP, event_type STRING, value DOUBLE): one row per
+    * (`windowLen` window, event_type) with its count and value sum.
     */
   def eventCountsStream(
       events: DataFrame,

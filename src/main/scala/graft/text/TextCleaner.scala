@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *   5. trim leading/trailing whitespace (utils.py:69-70)
   *
   * Every step is a plain `regexp_replace`, so the whole cleaner inlines into
-  * whole-stage codegen and — being deterministic — can be replicated
-  * verbatim in the DuckDB oracle (see SparkEntry.oracleSql("clean_text")).
+  * whole-stage codegen and, being deterministic, can be replicated
+  * verbatim by any SQL engine with RE2-style regexes.
   */
 object TextCleaner {
 
@@ -66,9 +66,9 @@ object TextCleaner {
     * `text: str`). Python's strip() removes UNICODE whitespace — Java's
     * bare `\s` is ASCII-only and would accept a doc padded with
     * NBSP/ideographic space that the reference rejects — so the set is
-    * the JDK White_Space set. The DuckDB oracle mirrors it as the RE2
-    * class `[\s\p{Z}\x{0B}\x{85}]`, which covers the same code points
-    * (U+000B is spelled out because RE2's `\s` has no `\v`).
+    * the JDK White_Space set. In RE2 the same set is the class
+    * `[\s\p{Z}\x{0B}\x{85}]` (U+000B is spelled out because RE2's `\s`
+    * has no `\v`).
     *
     * The one strip-length implementation: the Column form below calls
     * this function. It walks inward from both ends over the whitespace

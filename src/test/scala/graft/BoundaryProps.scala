@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.ByteBuffer
+import java.nio.charset.{CharacterCodingException, CodingErrorAction}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,9 +16,11 @@ import graft.text.Chunker
 
 /** Row routing at the flagship boundary over generated frames: null,
   * duplicate and non-integer ids, null / empty / whitespace-only /
-  * over-length / valid texts. Every row is labelled once or embedded,
-  * and no input fails the job. Labels come from a test-local spec (the
-  * regex strip and `toLongOption`), not from the engine's own helpers.
+  * over-length / valid texts, and raw bytes with invalid UTF-8 spliced
+  * in. Every row is labelled once or embedded, and no input fails the
+  * job. Labels come from a test-local spec (the regex strip,
+  * `toLongOption` and a strict JDK decoder), not from the engine's own
+  * helpers.
   */
 object BoundaryProps extends Properties("Boundary") {
 
@@ -35,6 +39,8 @@ object BoundaryProps extends Properties("Boundary") {
     maxTextLength = 200)
 
   final case class Row(doc_id: String, text: String, row: Int)
+
+  final case class RawRow(doc_id: Long, raw: Array[Byte], row: Int)
 
   private val ws = Seq(" ", "\t", "\n", "\u00A0", "\u3000", "\u2003", "\u0085")
 
@@ -75,7 +81,45 @@ object BoundaryProps extends Properties("Boundary") {
     onePartition <- Gen.oneOf(true, false)
   } yield (ids.lazyZip(texts).lazyZip(0 until n).map(Row).toVector, onePartition)
 
+  /** Byte sequences no UTF-8 decoder may accept: a lone continuation
+    * byte, a truncated 3-byte sequence, an overlong '/', an encoded
+    * surrogate (U+D800) and a byte that never occurs in UTF-8.
+    */
+  private val invalidUtf8: Seq[Array[Byte]] = Seq(
+    Seq(0x80), Seq(0xE2, 0x82), Seq(0xC0, 0xAF), Seq(0xED, 0xA0, 0x80), Seq(0xFF)
+  ).map(_.map(_.toByte).toArray)
+
+  /** A generated text's UTF-8 bytes with 0-3 invalid sequences spliced in
+    * at any byte offset, inside a multi-byte char included.
+    */
+  private val raw: Gen[Array[Byte]] = text.flatMap { t =>
+    if (t == null) Gen.const(null: Array[Byte])
+    else Gen.chooseNum(0, 3)
+      .flatMap(n => Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, Int.MaxValue), Gen.oneOf(invalidUtf8))))
+      .map(_.foldLeft(t.getBytes(UTF_8)) { case (b, (at, seq)) =>
+        val i = at % (b.length + 1)
+        b.take(i) ++ seq ++ b.drop(i)
+      })
+  }
+
+  private val rawFrame: Gen[(Vector[RawRow], Boolean)] = for {
+    n <- Gen.chooseNum(1, 24)
+    raws <- Gen.listOfN(n, raw)
+    onePartition <- Gen.oneOf(true, false)
+  } yield (raws.zipWithIndex.map { case (b, i) => RawRow(i.toLong, b, i) }.toVector, onePartition)
+
   // ---- the spec ----
+
+  /** The JDK's strict decode: None when any byte sequence is malformed;
+    * a null input decodes to null.
+    */
+  private def strictDecode(b: Array[Byte]): Option[String] =
+    if (b == null) Some(null)
+    else try Some(UTF_8.newDecoder()
+        .onMalformedInput(CodingErrorAction.REPORT)
+        .onUnmappableCharacter(CodingErrorAction.REPORT)
+        .decode(ByteBuffer.wrap(b)).toString)
+    catch { case _: CharacterCodingException => None }
 
   private val StripRegex = "(?U)^\\s+|\\s+$"
 
@@ -160,5 +204,26 @@ object BoundaryProps extends Properties("Boundary") {
           k.stripPrefix("error_count.batch.") -> v
       }
       (got == want) :| s"counted $got, want $want"
+    }
+
+  property("decodeUtf8 routes exactly the strictly invalid rows to decode_error") =
+    Prop.forAll(rawFrame) { case (rows, one) =>
+      import spark.implicits._
+      val m = new Metrics(spark.sparkContext)
+      val df = if (one) rows.toDF().coalesce(1) else rows.toDF()
+      val got = new InceptionEngine(conf, Some(m)).decodeUtf8(df, "raw")
+        .select("row", "text", "error_type").collect()
+        .map(r => r.getInt(0) -> (Option(r.getString(1)), Option(r.getString(2))))
+        .toMap
+      val want = rows.map(r => r.row -> (strictDecode(r.raw) match {
+        case Some(t) => (Option(t), None)
+        case None => (None, Some("decode_error"))
+      })).toMap
+      val disagree = rows.filter(r => got.get(r.row) != want.get(r.row))
+        .map(r => Option(r.raw).map(_.map(b => f"${b & 0xFF}%02X").mkString(" ")).orNull)
+      val rejected = want.values.count(_._2.isDefined).toLong
+      val counted = m.snapshot.getOrElse("error_count.text.decode_error", 0L)
+      (got == want) :| s"rows the spec decodes otherwise: $disagree" &&
+        (counted == rejected) :| s"counted $counted, want $rejected"
     }
 }

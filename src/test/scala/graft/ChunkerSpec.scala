@@ -254,10 +254,9 @@ class ChunkerSpec extends AnyFunSuite {
   }
 
   test("chunk_packing construction round-trips through the splitter") {
-    // the chunk_packing gate (SparkEntry) builds multi-sentence prose from
-    // the lowercase corpus: 8-word groups, first word capitalized, 'end.'
-    // terminator. The DuckDB oracle replays the CONSTRUCTED sentence list
-    // directly, so the splitter must recover it exactly — break at every
+    // multi-sentence prose built from the lowercase corpus: 8-word groups,
+    // first word capitalized, 'end.' terminator. The splitter must recover
+    // the CONSTRUCTED sentence list exactly — break at every
     // '. '+uppercase (UAX#29) and merge nothing ('end' is multi-letter and
     // not in the abbreviation inventory).
     val words = ("key agg row scan slow fast table value part hash merge " +
@@ -267,8 +266,8 @@ class ChunkerSpec extends AnyFunSuite {
       g.mkString(" ").capitalize + " end.").toVector
     val text2 = sents.mkString(" ")
     assert(SentenceSplitter.split(text2) == sents)
-    // and the packing at the gate's parameters exercises the overlap carry:
-    // chunk i+1 opens with the last 2 sentences of chunk i
+    // and packing at 48 tokens with 2 overlap sentences exercises the
+    // overlap carry: chunk i+1 opens with the last 2 sentences of chunk i
     val chunks = Chunker.splitSentences(
       Vector.fill(4)(sents).flatten, 48, 2)
     assert(chunks.length > 1)

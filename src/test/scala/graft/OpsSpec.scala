@@ -2041,59 +2041,6 @@ class OpsSpec extends AnyFunSuite {
       a >= 0.0 && a <= 1.0 && h >= 0.0 && h <= 1.0 })
   }
 
-  test("late-round invariants: growth identity, survival monotonicity, SRM bounds, lorenz shape") {
-    val dir = "/root/testdata/sf0.001"
-    // growth accounting: active = new + retained + resurrected, every month
-    SparkEntry.queries("q_growth_accounting")(spark, dir).collect()
-      .foreach { r =>
-        assert(r.getAs[Long]("n_active") == r.getAs[Long]("n_new")
-          + r.getAs[Long]("n_retained") + r.getAs[Long]("n_resurrected"),
-          s"growth identity broken at m=${r.getAs[Long]("m")}")
-      }
-    // KM log-survival is nonincreasing in duration
-    val surv = SparkEntry.queries("q_survival")(spark, dir).collect()
-      .map(_.getAs[Double]("log_s"))
-    assert(surv.zip(surv.drop(1)).forall { case (a, b) => b <= a + 1e-9 },
-      s"log-survival must be nonincreasing: ${surv.mkString(",")}")
-    // SRM: arms sum to the user universe; chi2 nonnegative
-    val srm = SparkEntry.queries("q_ab_srm")(spark, dir).head()
-    val users = spark.read.parquet(s"$dir/events.parquet")
-      .select("user_id").distinct().count()
-    assert(srm.getAs[Long]("n_a") + srm.getAs[Long]("n_b") == users)
-    assert(srm.getAs[Double]("srm_chi2") >= 0.0)
-    // lorenz: cumulative shares end at exactly 1.0 and are monotone
-    val lz = SparkEntry.queries("q_lorenz")(spark, dir).collect()
-    val pop = lz.map(_.getAs[Double]("cum_pop_share"))
-    val rev = lz.map(_.getAs[Double]("cum_rev_share"))
-    assert(math.abs(pop.last - 1.0) < 1e-9 &&
-      math.abs(rev.last - 1.0) < 1e-9)
-    assert(pop.zip(pop.drop(1)).forall { case (a, b) => b >= a } &&
-      rev.zip(rev.drop(1)).forall { case (a, b) => b >= a })
-  }
-
-  test("ml-eval gates: auc bounds, confusion totals, calibration bins, linreg r2") {
-    val dir = "/root/testdata/sf0.001"
-    val auc = SparkEntry.queries("q_roc_auc")(spark, dir).head()
-    val a = auc.getAs[Double]("auc")
-    assert(a >= 0.0 && a <= 1.0, s"auc=$a")
-    assert(auc.getAs[Long]("n_pos") > 0 && auc.getAs[Long]("n_neg") > 0)
-    val cm = SparkEntry.queries("q_confusion")(spark, dir).head()
-    val total = cm.getAs[Long]("tp") + cm.getAs[Long]("fp") +
-      cm.getAs[Long]("fn") + cm.getAs[Long]("tn")
-    val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
-    assert(total == nDocs, s"confusion cells sum $total != $nDocs docs")
-    val cal = SparkEntry.queries("q_calibration")(spark, dir).collect()
-    assert(cal.nonEmpty && cal.forall { r =>
-      val m = r.getAs[Double]("mean_score")
-      m >= 0.0 && m <= 1.0
-    })
-    val lr = SparkEntry.queries("q_linreg")(spark, dir).collect()
-    assert(lr.nonEmpty && lr.forall { r =>
-      val r2 = r.getAs[Double]("r2")
-      r2 >= 0.0 && r2 <= 1.0
-    })
-  }
-
   test("native shingle generator: streams (pos, fnv) rows; short/null docs emit none") {
     import graft.functions.WordShingles
     WordShingles.register(spark)

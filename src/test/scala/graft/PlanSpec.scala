@@ -615,69 +615,6 @@ class PlanSpec extends AnyFunSuite {
       s"no Scala UDF may block codegen in the recount stage:\n$plan")
   }
 
-  test("q_jaro_dedup: blocked equi-join scored by the native expression — no UDF, no cartesian") {
-    val plan = planOf("q_jaro_dedup")
-    assert(plan.contains("graft_jaro_winkler"),
-      s"scorer must be the native expression:\n$plan")
-    assert(!plan.contains("UDF("),
-      s"no Scala UDF may fence codegen in the pair stage:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"pairing must go through the blocking equi-join:\n$plan")
-  }
-
-  test("q_containment / q_item_cooccur / q_bigram_lm: blocked/keyed joins only, no cartesian") {
-    Seq("q_containment", "q_item_cooccur", "q_bigram_lm").foreach { q =>
-      val plan = planOf(q)
-      assert(!plan.contains("CartesianProduct"),
-        s"$q must never plan an all-pairs product:\n$plan")
-    }
-    // brand priors ride real broadcasts in the co-occurrence query
-    assert(planOf("q_item_cooccur").contains("BroadcastHashJoin"))
-  }
-
-  test("q_roc_auc: the unpartitioned midrank window runs over the score aggregate, not the corpus") {
-    val plan = SparkEntry.queries("q_roc_auc")(spark, sf)
-      .queryExecution.executedPlan.toString
-    val wIdx = plan.indexOf("Window")
-    assert(wIdx >= 0, s"expected a Window node:\n$plan")
-    // parents print above children: a HashAggregate BELOW the window
-    // means the single-partition window input is the distinct-score
-    // table, not raw rows
-    assert(plan.indexOf("HashAggregate", wIdx) > wIdx,
-      s"window input must be the per-score aggregate:\n$plan")
-  }
-
-  test("late-round window ops: every Window is PARTITIONED (no global sort over row volume)") {
-    // These queries' scale story is "per-user/per-key windows only";
-    // an unpartitioned Window over event rows would be a one-reducer
-    // sort at 100 TB. Check the optimized logical plan directly: no
-    // Window node may have an empty partitionSpec.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    Seq("q_pit_features", "q_horizon_label", "q_session_conversion",
-      "q_growth_accounting", "q_event_near_dup", "q_session_path")
-      .foreach { q =>
-        val lp = SparkEntry.queries(q)(spark, sf)
-          .queryExecution.optimizedPlan
-        val windows = lp.collect { case w: LWindow => w }
-        assert(windows.nonEmpty, s"$q: expected Window nodes")
-        val bad = windows.filter(_.partitionSpec.isEmpty)
-        assert(bad.isEmpty,
-          s"$q has ${bad.size} unpartitioned window(s):\n$lp")
-      }
-  }
-
-  test("q_shortest_path / q_hits: iterative loops return O(1)-lineage checkpointed plans") {
-    Seq("q_shortest_path", "q_hits").foreach { q =>
-      val plan = SparkEntry.queries(q)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("ExistingRDD"),
-        s"$q must return checkpointed state, not live lineage:\n$plan")
-      assert(!plan.contains("Scan parquet"),
-        s"$q's returned plan must not re-derive the graph from parquet " +
-          s"(lineage would grow with iterations):\n$plan")
-    }
-  }
-
   test("q4_priority: the EXISTS is a LEFT SEMI join, never a row " +
       "explosion, and the quarter filter reaches the orders scan") {
     val plan = planOf("q4_priority")
@@ -718,19 +655,4 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"))
   }
 
-  test("q_seq_patterns: the before-relation joins per-(user,type) " +
-      "min/max aggregates, never raw event pairs") {
-    val plan = planOf("q_seq_patterns")
-    // the join inputs must be aggregates (partial min/max below the
-    // exchange), so each side is user×type-sized, not event-sized
-    assert(plan.contains("HashAggregate"))
-    assert(!plan.contains("CartesianProduct"))
-  }
-
-  test("q_kneser_ney: continuation counts derive from ONE bigram-type " +
-      "aggregate — the corpus explode appears once in the plan") {
-    val plan = planOf("q_kneser_ney")
-    val explodes = "Generate explode".r.findAllIn(plan).length
-    assert(explodes <= 1, s"bigram explode planned $explodes times:\n$plan")
-  }
 }

@@ -98,251 +98,6 @@ class Round10Spec extends AnyFunSuite {
     assert(e.getMessage.contains("pool has 2"))
   }
 
-  test("Count-Min estimates are one-sided: every probe's sketch count " +
-      "is >= its exact count") {
-    val out = SparkEntry.queries("q_countmin")(
-      spark, "/root/testdata/sf0.001").collect()
-    assert(out.length == 8)
-    out.foreach { r =>
-      val exact = r.getLong(r.fieldIndex("exact_cnt"))
-      val est = r.getLong(r.fieldIndex("cms_est"))
-      assert(est >= exact,
-        s"CMS undercounted key ${r.getLong(0)}: $est < $exact")
-      assert(r.getLong(r.fieldIndex("overcount")) == est - exact)
-    }
-  }
-
-  test("PSM matching is backward-nearest: the mean covariate gap is " +
-      "non-negative and matches never exceed treated rows") {
-    val r = SparkEntry.queries("q_psm_att")(
-      spark, "/root/testdata/sf0.001").head()
-    val nT = r.getLong(r.fieldIndex("n_treated"))
-    val nM = r.getLong(r.fieldIndex("n_matched"))
-    assert(nM > 0 && nM <= nT)
-    assert(r.getDouble(r.fieldIndex("avg_bal_gap")) >= 0.0)
-  }
-
-  test("HHI stays inside its algebraic band [10000/n, 10000]") {
-    SparkEntry.queries("q_hhi")(spark, "/root/testdata/sf0.001")
-      .collect().foreach { r =>
-        val n = r.getLong(r.fieldIndex("n_suppliers"))
-        val hhi = r.getDouble(r.fieldIndex("hhi"))
-        assert(hhi >= 10000.0 / n - 1e-3 && hhi <= 10000.0 + 1e-3,
-          s"HHI $hhi outside band for n=$n")
-      }
-  }
-
-  test("Cohen's kappa row is internally consistent: cells partition n " +
-      "and kappa == (po - pe) / (1 - pe)") {
-    val r = SparkEntry.queries("q_cohen_kappa")(
-      spark, "/root/testdata/sf0.001").head()
-    def l(c: String) = r.getLong(r.fieldIndex(c))
-    assert(l("n11") + l("n00") + l("n10") + l("n01") == l("n"))
-    val po = r.getDouble(r.fieldIndex("po"))
-    val pe = r.getDouble(r.fieldIndex("pe"))
-    val k = r.getDouble(r.fieldIndex("kappa"))
-    assert(math.abs(k - (po - pe) / (1.0 - pe)) < 1e-4)
-    assert(k >= -1.0 - 1e-9 && k <= 1.0 + 1e-9)
-  }
-
-  test("ADF regression sits on n-1 observations of the daily series " +
-      "with a finite negative-or-small t statistic") {
-    val r = SparkEntry.queries("q_adf_test")(
-      spark, "/root/testdata/sf0.001").head()
-    val n = r.getLong(r.fieldIndex("n_obs"))
-    assert(n > 100)
-    val t = r.getDouble(r.fieldIndex("adf_t"))
-    assert(!t.isNaN && !t.isInfinite)
-    assert(r.getDouble(r.fieldIndex("se_beta")) > 0.0)
-  }
-
-  test("Granger unrestricted fit never explains less variance than " +
-      "the restricted one, and F is non-negative") {
-    val r = SparkEntry.queries("q_granger")(
-      spark, "/root/testdata/sf0.001").head()
-    val r2r = r.getDouble(r.fieldIndex("r2_r"))
-    val r2u = r.getDouble(r.fieldIndex("r2_u"))
-    assert(r2u >= r2r - 1e-9, s"r2_u $r2u < r2_r $r2r")
-    assert(r.getDouble(r.fieldIndex("f_stat")) >= -1e-9)
-  }
-
-  test("Ljung-Box Q is monotone non-decreasing in the lag and every " +
-      "rho stays inside [-1, 1]") {
-    val rows = SparkEntry.queries("q_ljung_box")(
-      spark, "/root/testdata/sf0.001").collect()
-    assert(rows.length == 7)
-    var prev = 0.0
-    rows.sortBy(_.getLong(0)).foreach { r =>
-      val rho = r.getDouble(r.fieldIndex("rho"))
-      assert(rho >= -1.0 - 1e-6 && rho <= 1.0 + 1e-6)
-      val q = r.getDouble(r.fieldIndex("q_cum"))
-      assert(q >= prev - 1e-9, s"Q decreased: $q < $prev")
-      prev = q
-    }
-  }
-
-  test("Hurst R/S block counts halve as the block size doubles and " +
-      "the exponent lands in (0, 1)") {
-    val rows = SparkEntry.queries("q_hurst")(
-      spark, "/root/testdata/sf0.001").collect().sortBy(_.getLong(0))
-    assert(rows.map(_.getLong(0)).toSeq == Seq(8L, 16L, 32L, 64L))
-    rows.sliding(2).foreach { p =>
-      val hi = p(0).getLong(p(0).fieldIndex("n_blocks"))
-      val lo = p(1).getLong(p(1).fieldIndex("n_blocks"))
-      assert(lo <= hi / 2 + 1, s"block counts not halving: $hi -> $lo")
-    }
-    val h = rows.head.getDouble(rows.head.fieldIndex("hurst"))
-    assert(h > 0.0 && h < 1.0, s"hurst $h outside (0,1)")
-    assert(rows.map(_.getDouble(rows.head.fieldIndex("hurst")))
-      .distinct.length == 1)
-  }
-
-  test("Bloom filter admits every build key (zero false negatives) " +
-      "and its FPR stays under the theoretical bound's 3x") {
-    val r = SparkEntry.queries("q_bloom_join")(
-      spark, "/root/testdata/sf0.001").head()
-    assert(r.getLong(r.fieldIndex("n_fn")) == 0L)
-    val nBuild = r.getLong(r.fieldIndex("n_build"))
-    val fpr = r.getDouble(r.fieldIndex("fpr"))
-    // (1 - e^{-kn/m})^k with k=4, m=4096
-    val theory = math.pow(1.0 - math.exp(-4.0 * nBuild / 4096.0), 4)
-    assert(fpr <= theory * 3 + 0.01, s"fpr $fpr vs theory $theory")
-  }
-
-  test("AMS F2 estimate lands within 60% of the exact second moment " +
-      "(4x4 median-of-means guarantee band)") {
-    val r = SparkEntry.queries("q_ams_f2")(
-      spark, "/root/testdata/sf0.001").head()
-    assert(r.getLong(r.fieldIndex("exact_f2")) > 0L)
-    assert(math.abs(r.getDouble(r.fieldIndex("rel_err"))) < 0.6)
-  }
-
-  test("BH rejections form a prefix of the p-ranked tests and every " +
-      "p is a valid probability") {
-    val rows = SparkEntry.queries("q_bh_fdr")(
-      spark, "/root/testdata/sf0.001").collect()
-      .sortBy(_.getLong(4))
-    assert(rows.length == 25)
-    val rejected = rows.map(_.getBoolean(5))
-    val firstAccept = rejected.indexOf(false)
-    if (firstAccept >= 0)
-      assert(rejected.drop(firstAccept).forall(!_),
-        "rejections are not a prefix")
-    rows.foreach { r =>
-      val p = r.getDouble(r.fieldIndex("p"))
-      assert(p >= 0.0 && p <= 1.0)
-    }
-  }
-
-  test("MDE shrinks when computed on 4x the data (root-n law, " +
-      "checked across scale factors)") {
-    val small = SparkEntry.queries("q_power_mde")(
-      spark, "/root/testdata/sf0.001").head()
-    val big = SparkEntry.queries("q_power_mde")(
-      spark, "/root/testdata/sf0.01").head()
-    assert(big.getLong(0) > small.getLong(0) * 2)
-    assert(big.getDouble(big.fieldIndex("mde_pct"))
-      < small.getDouble(small.fieldIndex("mde_pct")))
-  }
-
-  test("Kruskal-Wallis tie correction only inflates H, and H is " +
-      "non-negative") {
-    val r = SparkEntry.queries("q_kruskal_wallis")(
-      spark, "/root/testdata/sf0.001").head()
-    val h = r.getDouble(r.fieldIndex("h"))
-    val ht = r.getDouble(r.fieldIndex("h_tied"))
-    assert(h >= -1e-9)
-    assert(ht >= h - 1e-9, s"tie-corrected H $ht < raw $h")
-    assert(r.getLong(r.fieldIndex("n_groups")) == 3L)
-  }
-
-  test("McNemar statistic recomputes from its own discordant cells") {
-    val r = SparkEntry.queries("q_mcnemar")(
-      spark, "/root/testdata/sf0.001").head()
-    val b = r.getLong(r.fieldIndex("n10")).toDouble
-    val c = r.getLong(r.fieldIndex("n01")).toDouble
-    val expect = (math.abs(b - c) - 1) * (math.abs(b - c) - 1) / (b + c)
-    assert(math.abs(r.getDouble(r.fieldIndex("mcnemar")) - expect)
-      < 1e-4)
-  }
-
-  test("Kendall pair grid is exactly n-choose-2 months and tau_b " +
-      "stays in [-1, 1]") {
-    val r = SparkEntry.queries("q_kendall_tau")(
-      spark, "/root/testdata/sf0.001").head()
-    val n0 = r.getLong(r.fieldIndex("n_pairs"))
-    val nMonths = ((1 + math.sqrt(1 + 8.0 * n0)) / 2).round
-    assert(nMonths * (nMonths - 1) / 2 == n0,
-      s"$n0 is not a triangular number")
-    val t = r.getDouble(r.fieldIndex("tau_b"))
-    assert(t >= -1.0 - 1e-9 && t <= 1.0 + 1e-9)
-    assert(r.getLong(r.fieldIndex("nc"))
-      + r.getLong(r.fieldIndex("nd")) <= n0)
-  }
-
-  test("Theil decomposition: total ~= between + within, all " +
-      "non-negative") {
-    val r = SparkEntry.queries("q_theil_index")(
-      spark, "/root/testdata/sf0.001").head()
-    val t = r.getDouble(r.fieldIndex("theil_total"))
-    val b = r.getDouble(r.fieldIndex("theil_between"))
-    val w = r.getDouble(r.fieldIndex("theil_within"))
-    assert(t >= 0 && b >= -1e-6 && w >= 0)
-    assert(math.abs(t - (b + w)) < 1e-3,
-      s"decomposition broken: $t vs $b + $w")
-  }
-
-  test("JSD is symmetric-by-construction, bounded by ln 2, and " +
-      "jsd_norm is its [0,1] rescaling") {
-    val rows = SparkEntry.queries("q_jsd")(
-      spark, "/root/testdata/sf0.001").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val j = r.getDouble(r.fieldIndex("jsd"))
-      assert(j >= -1e-9 && j <= 0.6931471805599453 + 1e-6)
-      val jn = r.getDouble(r.fieldIndex("jsd_norm"))
-      assert(math.abs(jn - j / 0.6931471805599453) < 1e-5)
-      assert(r.getString(0) < r.getString(1))
-    }
-  }
-
-  test("Burrows' delta emits the 15 closest ordered source pairs " +
-      "with non-negative distances") {
-    val rows = SparkEntry.queries("q_burrows_delta")(
-      spark, "/root/testdata/sf0.001").collect()
-    assert(rows.length == 15)
-    val ds = rows.map(_.getDouble(2))
-    assert(ds.forall(_ >= 0.0))
-    assert(ds.sameElements(ds.sorted), "not ordered by delta")
-    rows.foreach(r => assert(r.getString(0) < r.getString(1)))
-  }
-
-  test("Cross-correlation at lag 0 equals the plain correlation " +
-      "sign-wise and every |r| <= 1; pair counts shrink with |lag|") {
-    val rows = SparkEntry.queries("q_xcorr")(
-      spark, "/root/testdata/sf0.001").collect()
-      .sortBy(_.getLong(0))
-    assert(rows.length == 15)
-    rows.foreach { r =>
-      assert(math.abs(r.getDouble(r.fieldIndex("r"))) <= 1.0 + 1e-9)
-    }
-    val n0 = rows(7).getLong(1)
-    assert(rows.forall(_.getLong(1) <= n0))
-  }
-
-  test("Isotonic fit is monotone non-decreasing and stays inside " +
-      "the observed y range") {
-    val rows = SparkEntry.queries("q_isotonic")(
-      spark, "/root/testdata/sf0.001").collect()
-      .sortBy(_.getDate(0).getTime)
-    assert(rows.length > 24)
-    val fits = rows.map(_.getDouble(rows.head.fieldIndex("fit")))
-    fits.sliding(2).foreach(p =>
-      assert(p(1) >= p(0) - 1e-9, s"fit decreased: ${p(0)} -> ${p(1)}"))
-    val ys = rows.map(_.getDouble(rows.head.fieldIndex("y")))
-    assert(fits.max <= ys.max + 1e-6 && fits.min >= ys.min - 1e-6)
-  }
-
   test("Quantile sketch estimates land within one bucket width of " +
       "the exact percentiles") {
     val rows = SparkEntry.queries("q_quantile_sketch")(

@@ -30,9 +30,7 @@ class Round11Spec extends AnyFunSuite {
     * relation's physical plan must therefore end in an aggregate.
     */
   test("corpus-statistics caches are aggregates, never raw token rows") {
-    val audited = Seq("q_naive_bayes", "q_jsd", "q_burrows_delta",
-      "q_unigram_kl", "q_rake_keywords", "q_bigram_lm",
-      "q_tfidf_cosine_pairs")
+    val audited = Seq("q_rake_keywords")
     audited.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       val cached = df.queryExecution.withCachedData.collect {

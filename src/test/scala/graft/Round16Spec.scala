@@ -9,9 +9,8 @@ import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, TakeOrderedAndProjectExec}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-16 specs: the mechanical single-partition-window audit over the
-  * WHOLE gate surface (VERDICT r15 ask #3) and the de-single-partitioned
-  * q_pareto / q_heaps_law plans (ask #2).
+/** Round-16 spec: the mechanical single-partition-window audit over the
+  * WHOLE gate surface.
   */
 class Round16Spec extends AnyFunSuite {
 
@@ -87,28 +86,5 @@ class Round16Spec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"single-partition windows over unbounded inputs:\n  " +
         offenders.mkString("\n  "))
-  }
-
-  test("q_pareto plans NO window at all; q_heaps_law's only " +
-      "unpartitioned window reads the buckets-sized aggregate") {
-    val pareto = SparkEntry.queries("q_pareto")(spark, sf)
-      .queryExecution.sparkPlan
-    assert(allNodes(pareto).collect { case w: WindowExecBase => w }.isEmpty,
-      "q_pareto regained a WindowExec — the head prefix sums must stay " +
-        "higher-order-function folds over the 25-row head")
-
-    val heaps = SparkEntry.queries("q_heaps_law")(spark, sf)
-      .queryExecution.sparkPlan
-    val wins = allNodes(heaps).collect { case w: WindowExecBase => w }
-    assert(wins.nonEmpty, "q_heaps_law lost its windows entirely?")
-    val unpart = wins.filter(_.partitionSpec.isEmpty)
-    // the carry window (q_concurrency recipe) is the ONLY unpartitioned
-    // one and it must read the per-bucket net aggregate, not the docs
-    assert(unpart.nonEmpty && unpart.forall(w => boundedBelow(w.child)),
-      "q_heaps_law's unpartitioned carry window must sit on the bucket " +
-        "aggregate")
-    val partd = wins.filter(_.partitionSpec.nonEmpty)
-    assert(partd.nonEmpty,
-      "q_heaps_law's doc-level running sums must be bucket-PARTITIONED")
   }
 }

