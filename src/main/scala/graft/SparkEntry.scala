@@ -51,12 +51,6 @@ object SparkEntry
           Some(new graft.engine.Metrics(k.sparkContext))))
     }
 
-  /** Metrics snapshot for the session's endpoint engine (monitoring.py
-    * surface; asserted in EngineSpec). */
-  def metricsSnapshot(s: SparkSession): Map[String, Long] =
-    Option(enginesWithMetrics.get(s))
-      .flatMap(_.metrics).map(_.snapshot).getOrElse(Map.empty)
-
   private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 

@@ -7,16 +7,18 @@ import org.apache.spark.sql.functions._
   * (`ARRAY<FLOAT>`).
   *
   * Two paths:
-  *   - [[bruteForceTopK]] — exact cosine top-k as pure Column expressions
-  *     (`zip_with` dot product + `aggregate` fold), fully codegen'd, no
-  *     UDF. Scan-shaped: at 100 TB this is one narrow pass + a global
-  *     top-k (Spark's TakeOrderedAndProject — no full sort, no wide
-  *     shuffle). The baseline every ANN variant is measured against.
+  *   - [[bruteForceTopK]] — exact cosine top-k with the native
+  *     `graft_cosine` expression (graft.functions.CosineSimilarity): the
+  *     query is one literal, so the kernel runs its constant-query loop,
+  *     and the 4dp rank key is projected once per row below the top-k.
+  *     Scan-shaped: at 100 TB this is one narrow pass + a global top-k
+  *     (Spark's TakeOrderedAndProject — no full sort, no wide shuffle).
+  *     The baseline every ANN variant is measured against.
   *   - [[lshTopK]] — random-hyperplane LSH bucket pruning: probe only
   *     buckets within `probeHamming` bits of the query's bucket. Cuts the
   *     scanned fraction to ~sum(C(planes,i))/2^planes (e.g. 16 planes,
   *     probe<=2: ~0.2%) at some recall cost; recall is measured in
-  *     SimilaritySpec against the brute-force truth.
+  *     OpsSpec against the brute-force truth.
   */
 object Similarity {
 
@@ -38,14 +40,36 @@ object Similarity {
       .otherwise(dot / (nv * lit(nq)))
   }
 
-  /** Native-expression cosine against a literal query vector. */
+  /** Native-expression cosine against a literal query vector. The query
+    * enters the plan as ONE `ARRAY<FLOAT>` literal (not an `array(lit…)`
+    * node per element, which every analyzer and optimizer pass would
+    * walk), so the kernel takes its constant-query loop.
+    */
   private def cosineNative(df: DataFrame, vec: Column, query: Array[Float]): Column = {
     graft.functions.CosineSimilarity.register(df.sparkSession)
-    graft.functions.CosineSimilarity.cosine(
-      vec, array(query.toSeq.map(lit(_)): _*))
+    graft.functions.CosineSimilarity.cosine(vec, lit(query))
   }
 
-  /** Exact cosine top-k: narrow scan + TakeOrderedAndProject. */
+  /** Top `k` rows of `df` by the 4dp-ROUNDED `score` descending, then
+    * `id`. Raw-double ordering can differ in the last ulp between
+    * accumulation orders (and between a kernel and an oracle), flipping
+    * top-k membership at the boundary; the rounded key with the id
+    * tiebreak does not. The key is projected once per row below the
+    * top-k (the projection references `score` twice, so CollapseProject
+    * keeps it apart and the score is not re-evaluated), not evaluated
+    * inside TakeOrderedAndProject's comparator, and is dropped from the
+    * output.
+    */
+  private def topKByRoundedScore(df: DataFrame, score: String, id: String, k: Int): DataFrame =
+    df.withColumn("rank_key", round(col(score), 4))
+      .orderBy(col("rank_key").desc, col(id))
+      .limit(k)
+      .drop("rank_key")
+
+  /** Exact cosine top-k: narrow scan + TakeOrderedAndProject, ranked on
+    * the rounded score with the id as tiebreak ([[topKByRoundedScore]]);
+    * the output `cosine` is the raw score.
+    */
   def bruteForceTopK(
       df: DataFrame,
       idCol: String,
@@ -53,15 +77,11 @@ object Similarity {
       query: Array[Float],
       k: Int
   ): DataFrame =
-    df.select(
+    topKByRoundedScore(
+      df.select(
         col(idCol).cast("long").as("vec_id"),
-        cosineNative(df, col(vecCol), query).as("cosine"))
-      // rank on the ROUNDED score with the id as tiebreak: raw-double
-      // ordering can differ in the last ulp between accumulation orders
-      // (and between this kernel and an oracle), flipping top-k
-      // membership at the boundary
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+        cosineNative(df, col(vecCol), query).as("cosine")),
+      "cosine", "vec_id", k)
 
   /** Matryoshka (coarse-to-fine) two-stage top-k: rank every vector by
     * cosine on its FIRST `coarseDim` components only (cosine normalizes
@@ -91,14 +111,17 @@ object Similarity {
     require(coarseDim >= 1 && coarseDim < query.length,
       "coarseDim must be in [1, dim)")
     require(candidates >= k, "candidates must be >= k")
-    val coarse = df
-      .select(
+    val coarse = topKByRoundedScore(
+      df.select(
         col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("v"),
         cosineNative(df, slice(col(vecCol), 1, coarseDim),
-          query.take(coarseDim)).as("cosine_coarse"))
-      .orderBy(round(col("cosine_coarse"), 4).desc, col("vec_id"))
-      .limit(candidates)
+          query.take(coarseDim)).as("cosine_coarse")),
+      "cosine_coarse", "vec_id", candidates)
+    // the rerank sees only `candidates` rows, so its key stays in the
+    // ordering: a rank-key projection here would stack a second Project
+    // on the rerank one once both are pushed below stage 1's limit, and
+    // stage 1 would no longer plan as a TakeOrderedAndProject
     coarse
       .select(
         col("vec_id"),
@@ -127,16 +150,13 @@ object Similarity {
     val planes = Dedup.hyperplanes(numPlanes, dim)
     val qBucket = Dedup.hyperplaneBucket(query, planes)
     val bucketU = udf((v: Array[Float]) => Dedup.hyperplaneBucket(v, planes))
-    df.select(
+    val pruned = df.select(
         col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("v"))
       .withColumn("bucket", bucketU(col("v")))
       .filter(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
       .select(col("vec_id"), cosineNative(df, col("v"), query).as("cosine"))
-      // same rounded-score + id-tiebreak ranking as bruteForceTopK: raw
-      // doubles can flip top-k membership in the last ulp between runs
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+    topKByRoundedScore(pruned, "cosine", "vec_id", k)
   }
 
   /** Persist the corpus in LSH-bucketed LAYOUT: parquet partitioned by the
