@@ -1,5 +1,7 @@
 package graft.embed
 
+import graft.text.Chunker
+
 /** The pluggable embedder seam. The reference's whole design makes the
   * model a PARAMETER — `transformer_model_name` arrives via config
   * (inception/config.py:6-9) and the service loads whatever it names
@@ -28,11 +30,30 @@ trait EmbeddingModel extends Serializable {
     */
   def embedBatch(texts: Seq[String]): Seq[Array[Float]] = texts.map(embed)
 
+  /** The flagship's per-document call: the lead-prefixed chunks of
+    * `Chunker.split`, embedded through [[embedBatch]] in `batchSize`
+    * groups. Returns each chunk's text with the lead stripped
+    * (`replace(LeadText, "")`, embedding_service.py:221-223) and its
+    * vector, in document order. `Embedder` overrides it with chunk
+    * vectors composed from one token scan per sentence; any other model
+    * keeps this path and sees exactly these chunks and batches.
+    */
+  def embedDocument(
+      text: String,
+      maxTokens: Int,
+      numOverlapSentences: Int,
+      batchSize: Int
+  ): Vector[(String, Array[Float])] = {
+    val chunks = Chunker.split(text, maxTokens, numOverlapSentences)
+    val vecs = chunks.grouped(batchSize).flatMap(embedBatch).toVector
+    chunks.zip(vecs).map { case (c, v) => (c.replace(Chunker.LeadText, ""), v) }
+  }
+
   /** Query embedding: prepend the asymmetric query task prefix
     * (embedding_service.py:159-164), then embed.
     */
   def embedQuery(text: String): Array[Float] =
-    embed(graft.text.Chunker.QueryLead + text)
+    embed(Chunker.QueryLead + text)
 }
 
 object EmbeddingModel {

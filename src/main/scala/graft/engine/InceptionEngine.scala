@@ -366,7 +366,8 @@ object InceptionEngine {
     math.max(1, math.min(slots / partitions, cores))
 
   /** The flagship's per-document work, pure so it can run off the task
-    * thread: chunk, embed in `batchSize` micro-batches, reassemble.
+    * thread: the model's [[graft.embed.EmbeddingModel.embedDocument]]
+    * (chunk, embed in `batchSize` micro-batches), then reassembly.
     * Returns the row, its chunk count and the elapsed milliseconds.
     */
   private def chunkAndEmbed(
@@ -377,13 +378,11 @@ object InceptionEngine {
       batchSize: Int
   ): (DocumentEmbeddings, Int, Long) = {
     val t0 = System.nanoTime()
-    val chunks = Chunker.split(d.text, maxTokens, overlap)
-    val vecs = chunks.grouped(batchSize).flatMap(mdl.embedBatch).toVector
+    val chunks = mdl.embedDocument(d.text, maxTokens, overlap, batchSize)
     val elapsedMs = (System.nanoTime() - t0) / 1000000L
-    val embs = chunks.lazyZip(vecs).zipWithIndex.map {
-      case ((chunk, v), idx) =>
-        ChunkEmbedding(idx + 1, chunk.replace(Chunker.LeadText, ""), v)
+    val embs = chunks.zipWithIndex.map {
+      case ((chunk, v), idx) => ChunkEmbedding(idx + 1, chunk, v)
     }
-    (DocumentEmbeddings(d.doc_id, embs.toVector), chunks.size, elapsedMs)
+    (DocumentEmbeddings(d.doc_id, embs), chunks.size, elapsedMs)
   }
 }

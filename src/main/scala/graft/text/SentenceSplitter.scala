@@ -30,6 +30,16 @@ import java.util.Locale
   * sentence starter; this pass never does. No such case exists in the
   * fixture.
   *
+  * Boundaries: on all-ASCII text, a port of the JDK's own sentence DFA
+  * (`sun.text.RuleBasedBreakIterator.handleNext` over the JDK 17
+  * `Locale.US` tables, [[nextBoundary]]); on any other text, BreakIterator
+  * itself. The two agree because the port runs the same automaton over
+  * the same tables: on ASCII, no char is in an ignored category and each
+  * char is one code point, so the port's loop is `handleNext`'s step for
+  * step, with a run of non-terminators in the start state skipped by one
+  * plain scan. SplitterSpec pins the tables against BreakIterator; a JDK
+  * whose tables differ fails it.
+  *
   * The merge test ([[endsWithAbbreviation]]) reads only the tail of each
   * span, by index, with the semantics of the unanchored regex
   * `([A-Za-z]+)\.\s*$` — including `$` matching before a final line
@@ -87,7 +97,7 @@ object SentenceSplitter {
     val standalone = at == from || !Character.isLetter(text.charAt(at - 1))
     if (!standalone) false
     else if (dot - at > 1)
-      Abbreviations.contains(text.substring(at, dot).toLowerCase(Locale.ROOT))
+      isAbbreviation(text, at, dot)
     else if (Character.isLowerCase(text.charAt(at)))
       true // citation/page particles: "v.", "p.", "n." never end a sentence
     else
@@ -97,6 +107,30 @@ object SentenceSplitter {
       // heuristic re-breaks; so do we.
       prevWordIsCapitalized(text, from, at)
   }
+
+  /** An ASCII-letter run's [[Abbreviations]] key: 5 bits per lowercased
+    * letter, so keys of different runs differ and fit an Int up to 6
+    * letters.
+    */
+  private def abbreviationKey(s: String, from: Int, until: Int): Int = {
+    var k = 0
+    var i = from
+    while (i < until) { k = (k << 5) | ((s.charAt(i) | 0x20) - 'a' + 1); i += 1 }
+    k
+  }
+
+  private val MaxAbbreviationLength = Abbreviations.map(_.length).max
+
+  private val AbbreviationKeys: Array[Int] =
+    Abbreviations.toArray.map(a => abbreviationKey(a, 0, a.length)).sorted
+
+  /** Whether the `[A-Za-z]` run `text[from, until)` is in [[Abbreviations]],
+    * ASCII-case-insensitively and without allocating.
+    */
+  private def isAbbreviation(text: String, from: Int, until: Int): Boolean =
+    until - from <= MaxAbbreviationLength &&
+      java.util.Arrays.binarySearch(AbbreviationKeys,
+        abbreviationKey(text, from, until)) >= 0
 
   private def isAsciiSpace(c: Char): Boolean =
     c == ' ' || (c >= '\t' && c <= '\r') // \t \n \x0B \f \r
@@ -119,34 +153,146 @@ object SentenceSplitter {
     }
   }
 
-  /** Split into trimmed, non-empty sentences. BreakIterator spans cover the
+  /** Split into trimmed, non-empty sentences. Boundary spans cover the
     * whole input and merging only coalesces ADJACENT spans, so only
     * whitespace is lost by trimming — preserving the chunker's
     * losslessness invariant (whitespace-stripped concatenation, reference
     * tests/test_embedding_service.py:309-315).
     */
   def split(text: String): Vector[String] = {
-    if (text == null || text.isEmpty) return Vector.empty
+    val out = Vector.newBuilder[String]
+    forEachSentence(text)((from, until) => out += text.substring(from, until))
+    out.result()
+  }
+
+  /** Calls `f(from, until)` with the bounds of each sentence [[split]]
+    * returns, in order: the boundaries, merged after abbreviations and
+    * trimmed like `String.trim`; empty spans are skipped.
+    */
+  private[graft] def forEachSentence(text: String)(f: (Int, Int) => Unit): Unit = {
+    if (text == null || text.isEmpty) return
+    val n = text.length
     // BreakIterator instances are not thread-safe; they are cheap, so one
     // per call keeps the function pure and executor-thread-safe.
-    val it = BreakIterator.getSentenceInstance(Locale.US)
-    it.setText(text)
-    // raw [start, end) spans, with abbreviation boundaries merged into
-    // the following span BEFORE trimming (offsets stay contiguous)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var start = it.first()
-    var end = it.next()
-    while (end != BreakIterator.DONE) {
-      if (spans.nonEmpty &&
-          endsWithAbbreviation(text, spans.last._1, spans.last._2))
-        spans(spans.length - 1) = (spans.last._1, end)
-      else spans += ((start, end))
-      start = end
-      end = it.next()
+    val it =
+      if (isAscii(text)) null
+      else {
+        val bi = BreakIterator.getSentenceInstance(Locale.US)
+        bi.setText(text)
+        bi
+      }
+    def emit(from: Int, until: Int): Unit = {
+      var s = from
+      var e = until
+      while (s < e && text.charAt(s) <= ' ') s += 1
+      while (e > s && text.charAt(e - 1) <= ' ') e -= 1
+      if (s < e) f(s, e)
     }
-    spans.iterator
-      .map { case (s, e) => text.substring(s, e).trim }
-      .filter(_.nonEmpty)
-      .toVector
+    // the pending span [start, end): an abbreviation boundary merges the
+    // next span into it BEFORE trimming, so offsets stay contiguous
+    var start = 0
+    var end = -1
+    var at = 0
+    while (at < n) {
+      val next = if (it == null) nextBoundary(text, at) else it.next()
+      if (end >= 0 && endsWithAbbreviation(text, start, end)) end = next
+      else {
+        if (end >= 0) emit(start, end)
+        start = at
+        end = next
+      }
+      at = next
+    }
+    if (end >= 0) emit(start, end)
+  }
+
+  private def isAscii(text: String): Boolean = {
+    var i = 0
+    while (i < text.length && text.charAt(i) < 0x80) i += 1
+    i == text.length
+  }
+
+  // ---- the JDK 17 sentence rules on ASCII text ----
+  //
+  // `sun.text.RuleBasedBreakIterator` drives a DFA over character
+  // categories; these are its `Locale.US` sentence tables (`stateTable`,
+  // `endStates`, `lookaheadStates`, `charCategoryTable`), read from the
+  // running JDK by reflection. SplitterSpec pins them against
+  // BreakIterator itself: every ASCII char against its
+  // category, every string of up to 6 category representatives, random
+  // and corpus-style text. Categories 1 (U+2029) and 7 occur only outside
+  // ASCII, which keeps BreakIterator.
+
+  private final val NumCategories = 13
+
+  /** The category of each ASCII char. */
+  private val Category: Array[Byte] = {
+    val c = Array.fill[Byte](128)(8)
+    def set(chars: String, cat: Int): Unit = chars.foreach(ch => c(ch) = cat.toByte)
+    set(",", 0)
+    set(".", 2)
+    set("\"'", 3)
+    set("!?", 4)
+    set(('A' to 'Z').mkString, 5)
+    set(('a' to 'z').mkString, 6)
+    set(('0' to '9').mkString, 9)
+    set(")]}", 10)
+    set("([{", 11)
+    set("\t\n\f\r ", 12)
+    c
+  }
+
+  /** `Transition(state * NumCategories + category)`; state 0 stops. */
+  private val Transition: Array[Byte] = Array[Int](
+    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
+    1, 2, 5, 1, 11, 1, 1, 3, 1, 1, 1, 1, 1,
+    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
+    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 3,
+    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
+    1, 2, 5, 9, 11, 1, 1, 8, 8, 1, 5, 8, 6,
+    1, 2, 5, 8, 11, 4, 1, 8, 8, 1, 1, 8, 7,
+    1, 2, 5, 10, 11, 4, 4, 10, 10, 1, 1, 10, 7,
+    1, 2, 5, 8, 11, 4, 4, 8, 8, 1, 1, 8, 1,
+    1, 2, 5, 9, 11, 4, 4, 10, 10, 1, 5, 10, 6,
+    0, 0, 0, 8, 0, 4, 4, 8, 8, 0, 0, 8, 0,
+    0, 2, 11, 11, 11, 0, 0, 0, 0, 0, 11, 0, 12,
+    0, 2, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 12
+  ).map(_.toByte)
+
+  // bit s set: state s is an end (accepting) / a lookahead state
+  private final val EndStates = (1 << 1) | (1 << 2) | (1 << 3) | (1 << 4) |
+    (1 << 11) | (1 << 12)
+  private final val LookaheadStates = (1 << 4) | (1 << 5) | (1 << 6) |
+    (1 << 7) | (1 << 9)
+
+  /** The boundary after `pos` in all-ASCII `text` (`pos < text.length`):
+    * `RuleBasedBreakIterator.handleNext` over the tables above. Every
+    * ASCII char but `.`, `!` and `?` keeps state 1, an end state, so a
+    * run of them is skipped in one plain scan.
+    */
+  private[graft] def nextBoundary(text: String, pos: Int): Int = {
+    val n = text.length
+    var result = pos + 1
+    var lookahead = 0
+    var state = 1
+    var i = pos
+    while (i < n && state != 0) {
+      if (state == 1) {
+        var j = i
+        while (j < n && { val c = text.charAt(j); c != '.' && c != '!' && c != '?' })
+          j += 1
+        if (j > i) { result = j; i = j }
+      }
+      if (i < n) {
+        state = Transition(state * NumCategories + Category(text.charAt(i)))
+        val bit = 1 << state
+        if ((LookaheadStates & bit) != 0) {
+          if ((EndStates & bit) != 0) result = lookahead else lookahead = i + 1
+        } else if ((EndStates & bit) != 0) result = i + 1
+        i += 1
+      }
+    }
+    if (i == n && lookahead == n) result = n
+    result
   }
 }

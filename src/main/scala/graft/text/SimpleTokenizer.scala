@@ -45,11 +45,22 @@ object SimpleTokenizer {
     * Allocation-free per token — the embedder hashes these ranges in its
     * per-row hot loop.
     */
-  final class Cursor(text: String) {
-    private[this] val n = if (text == null) 0 else text.length
+  final class Cursor(private[this] var text: String) {
+    private[this] var n = if (text == null) 0 else text.length
     private[this] var wordEnd = 0 // end of the word run being sliced
     private[this] var from = 0
     private[this] var until = 0
+
+    /** Re-aims the cursor at `s[begin, end)`, scanned as if the text were
+      * `s.substring(begin, end)`: a word run stops at `end`.
+      */
+    def reset(s: String, begin: Int, end: Int): Unit = {
+      text = s
+      n = end
+      wordEnd = begin
+      from = begin
+      until = begin
+    }
 
     /** The current token's range; valid after `next()` returned true. */
     def start: Int = from
