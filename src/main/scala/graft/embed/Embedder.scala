@@ -166,6 +166,8 @@ object Embedder extends EmbeddingModel {
         packer.add(scan(doc, from, until, budget))
       }
       packer.finish()
+      // scratch grown by a huge chunk is not kept on the thread
+      if (starts.length > 4096 || feats.length > (1 << 16)) kernels.remove()
       out.result()
     }
 

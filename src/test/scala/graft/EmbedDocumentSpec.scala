@@ -148,6 +148,15 @@ class EmbedDocumentSpec extends AnyFunSuite {
     assert(got == ComposeSpec.embedDocument(text, Int.MaxValue, 2))
   }
 
+  test("a chunk of 10k zero-token sentences, and the next document on the same thread") {
+    val huge = "Opening words. " + ("\u2003\u2029" * 10000) + "Closing words."
+    for (text <- Seq(huge, GoldenFixtureSpec.text)) {
+      val got = Embedder.embedDocument(text, 512, 2, 8)
+        .map { case (c, v) => (c, ComposeSpec.bits(v)) }
+      assert(got == ComposeSpec.embedDocument(text, 512, 2))
+    }
+  }
+
   test("model seam: a custom model gets the lead-prefixed Chunker.split chunks in processingBatchSize batches") {
     import spark.implicits._
     val conf = EngineConfig(maxTokens = 40, processingBatchSize = 3)
