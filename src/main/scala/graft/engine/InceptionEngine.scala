@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.config.EngineConfig
-import graft.text.{Chunker, SentenceSplitter, TextCleaner}
+import graft.text.{Chunker, TextCleaner}
 import graft.util.OrderedFanOut
 
 /** One chunk's result — reference `ChunkEmbedding` (inception/schemas.py:46-59). */
@@ -130,10 +130,6 @@ class InceptionEngine(
     Validation.queryErrorType(text, conf)
 
   // ---- UDFs ----
-
-  /** O4 as UDF: sentence list. */
-  val sentencesUdf =
-    udf((text: String) => SentenceSplitter.split(Option(text).getOrElse("")))
 
   /** O6 as UDF: lead-prefixed chunk list. */
   val chunksUdf = {

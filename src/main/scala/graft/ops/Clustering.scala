@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   * DETERMINISTIC by the same contract that makes the IVF family
   * oracle-checkable: fixed-point accumulation, list-id-sorted iteration,
   * first-seen argmax — same corpus → bit-identical centroids and
-  * assignments on any partitioning, which is why `q_kmeans` can be
-  * hash-checked against a DuckDB replay of the whole loop.
+  * assignments on any partitioning.
   *
   * Scale: per iteration one narrow scan + one keyed agg whose shuffle
   * volume is O(partitions × k × dim) — corpus vectors never shuffle,

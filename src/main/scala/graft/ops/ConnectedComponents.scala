@@ -73,11 +73,11 @@ object ConnectedComponents {
       // ≤ comp, so composing the mapping halves the remaining distance
       // EAGER per-round checkpoint (r16: two alternatives were measured
       // and REVERTED — (a) lazy checkpoints fused with the count saved a
-      // job/round but lost LogicalRDD size stats and regressed the
-      // live-subquery callers (dedup_clusters 1.5× slower); (b) persist
+      // job/round but lost LogicalRDD size stats and regressed callers
+      // that join the result in a live subquery (1.5× slower); (b) persist
       // fused with the count kept stats but not plan TRUNCATION, and the
-      // hopped self-join then triples the analyzed plan per round —
-      // q_graph_robustness measured 2.7× slower. The eager checkpoint
+      // hopped self-join then triples the analyzed plan per round
+      // (2.7× slower). The eager checkpoint
       // does both jobs: truncation for planning and stats for broadcast
       // planning.)
       val stepped = hopped

@@ -336,7 +336,7 @@ object Dedup {
     * Scale shape: inherits the banded/capped pair generation (never
     * all-pairs) and pointer-jumping components (O(log diameter) rounds);
     * the final join back to the corpus is keyed on the id. The same
-    * composition as text-space dedup_clusters, in embedding space.
+    * composition as text-space near-dup clustering, in embedding space.
     */
   def semanticDedup(
       df: DataFrame,

@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * and each weight update is re-quantized with the same HALF_UP rule
   * Spark's `round()` uses — the whole trajectory is a pure function of
   * the data, byte-identical under any partitioning, and an engine that
-  * can evaluate the same arithmetic (see q_quality_classifier's
-  * unrolled-CTE DuckDB twin) reproduces every iteration bit-for-bit
+  * can evaluate the same arithmetic reproduces every iteration bit-for-bit
   * (the [[PageRank]] determinism recipe applied to model training).
   *
   * Scale shape: one full-scan aggregate per iteration (map-side partial

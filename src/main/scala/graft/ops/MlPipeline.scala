@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * stay inside `Pipeline`/`Transformer` land when they want to:
   *
   *  - [[tfidfPipeline]]: RegexTokenizer → HashingTF → IDF → Normalizer,
-  *    the standard sparse-feature text vectorizer. Complements the exact
-  *    per-term `q_tfidf` query: the ML pipeline trades exact term
+  *    the standard sparse-feature text vectorizer. Unlike an exact
+  *    per-term TF-IDF aggregate, the ML pipeline trades exact term
   *    identity for a fixed-width hashed space that never shuffles a
   *    vocabulary — at 100 TB there is no driver-resident dictionary at
   *    all (HashingTF is stateless; only IDF carries a fitted

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * re-quantized to DECIMAL(28,12) — so the rank state after every
   * iteration is a pure function of the graph, byte-identical under any
   * partitioning and replayable by any engine that can divide doubles
-  * (the q_perplexity/BPE determinism recipe applied to an iterative
-  * fixpoint).
+  * (the BPE determinism recipe applied to an iterative fixpoint).
   *
   * Scale shape: per iteration one join of the rank table onto the edge
   * list (both keyed on src — co-partitioned after the first shuffle)

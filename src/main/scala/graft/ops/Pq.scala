@@ -10,15 +10,13 @@ import org.apache.spark.sql.functions._
   * than float32). Public design: Jégou et al., "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011.
   *
-  * DETERMINISM: the subspace Lloyd loops reuse the exact contract that
-  * makes q_kmeans/ann_ivf oracle-checkable — splitmix-hyperplane init
-  * (no RNG), fixed-point 2^24 centroid accumulation (associative),
-  * id-ordered centroids with first-seen L2 argmin tie-break, and the
-  * L2 distance evaluated as the fixed expression vv − 2·vc + cc with
-  * each fold in dim order. Same corpus → bit-identical codebooks,
-  * codes, and (9-dp-quantized) reconstruction errors on any
-  * partitioning — which is why the DuckDB twin can re-run the whole
-  * fit+encode and hash-match.
+  * DETERMINISM: the subspace Lloyd loops reuse the exact contract of
+  * the k-means and IVF builds — splitmix-hyperplane init (no RNG),
+  * fixed-point 2^24 centroid accumulation (associative), id-ordered
+  * centroids with first-seen L2 argmin tie-break, and the L2 distance
+  * evaluated as the fixed expression vv − 2·vc + cc with each fold in
+  * dim order. Same corpus → bit-identical codebooks, codes, and
+  * (9-dp-quantized) reconstruction errors on any partitioning.
   *
   * Scale: training scans the corpus once per (subspace × iteration)
   * against the persisted 2-column projection; only m×k×subDim floats
@@ -179,9 +177,9 @@ object Pq {
 
   /** IVF-PQ: the composed billion-scale ANN layout. An IVF coarse
     * layer (hyperplane init → one fixed-point centroid refinement →
-    * cosine assignment — the exact [[Similarity]] contract the ann_ivf
-    * oracle replays) prunes candidates to the query's `nProbe` lists;
-    * the ADC fine ranking then scores ONLY the survivors' codes. At
+    * cosine assignment — the exact [[Similarity]] IVF contract) prunes
+    * candidates to the query's `nProbe` lists; the ADC fine ranking
+    * then scores ONLY the survivors' codes. At
     * scale both layers are precomputed index artifacts (list-partitioned
     * code tables); the probe reads nProbe partitions of 8-byte codes —
     * neither the vectors nor the other lists.

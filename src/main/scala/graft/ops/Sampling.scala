@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Sampling {
 
   /** Uniform-in-[0,1) driven by md5 of the row id — the same
-    * hash-as-randomness idiom as the q_sample_hash gate, widened from a
+    * hash-as-randomness idiom as a hash-digit sample, widened from a
     * digit test to a full 32-bit uniform: first 8 hex digits → integer →
     * `(v + 0.5) / 2^32` (the +0.5 keeps u strictly positive so ln(u) is
     * finite).

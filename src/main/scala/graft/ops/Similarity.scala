@@ -481,8 +481,7 @@ object Similarity {
     * centroid vectors ever reach the driver — never the corpus. The
     * fixed-point accumulator plus the list-id sort make the whole build
     * DETERMINISTIC: same corpus → bit-identical centroids and list
-    * assignments on any partitioning (reproducible index builds, and the
-    * reason ann_ivf is oracle-checkable).
+    * assignments on any partitioning (reproducible index builds).
     */
   private[ops] def refineCentroids(
       assigned: DataFrame, dim: Int): Array[(Int, Array[Float])] = {
@@ -552,7 +551,7 @@ object Similarity {
         graft.functions.CosineSimilarity.cosine(col("cv"), col("qv")))
       .withColumn("pid", spark_partition_id())
     // rank on the ROUNDED cosine + id like every other ranking surface
-    // (lshTopK, ivfTopK, q_knn_eval): last-ulp FP differences across
+    // (lshTopK, ivfTopK): last-ulp FP differences across
     // engines/partitionings must never flip which rows make the top-k
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id", "pid")

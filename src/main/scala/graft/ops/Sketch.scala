@@ -158,8 +158,7 @@ object Sketch {
     * the KMV merge operator. Associative, commutative, idempotent
     * (set-union then re-truncate), so incremental maintenance over any
     * micro-batch arrival order converges to the one-shot sketch — the
-    * property OpsSpec's mergeability test pins and the streaming gate
-    * exercises over real batches.
+    * property OpsSpec's mergeability test pins.
     */
   def mergeSketches(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("grp").orderBy(col("f"))

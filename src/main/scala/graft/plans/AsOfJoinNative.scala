@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.LongType
   * [[AsOfJoinStrategy]], and a sort-merge [[AsOfJoinExec]] physical
   * operator.
   *
-  * Semantics (identical to ops/AsOfJoin and DuckDB `ASOF LEFT JOIN`,
-  * which the `q_asof_join_native` oracle checks): for every left row, the
-  * right row with equal keys and the greatest time <= the left time; all
-  * right columns carried (null when no prior row).
+  * Semantics (identical to ops/AsOfJoin and DuckDB `ASOF LEFT JOIN`):
+  * for every left row, the right row with equal keys and the greatest
+  * time <= the left time; all right columns carried (null when no prior
+  * row).
   *
   * Scale shape: ONE hash shuffle per side on the keys (declared via
   * `ClusteredDistribution`, so Catalyst plans/reuses the exchanges) and

@@ -61,9 +61,8 @@ object StreamingEmbed {
     * with "left_outer", an unmatched left row is emitted (right columns
     * NULL) once the watermark passes its join window — i.e. once no
     * future right row can possibly match. Until the watermark passes,
-    * the row waits in state; callers comparing against a batch oracle
-    * must restrict both sides to the watermark-complete region (see the
-    * events_stream_left_join gate).
+    * the row waits in state; callers comparing against a batch join
+    * must restrict both sides to the watermark-complete region.
     */
   def intervalJoinStreams(
       left: DataFrame,
@@ -130,37 +129,6 @@ object StreamingEmbed {
       }
     }
 
-  /** Hadoop-FileSystem high-water mark: the committed batchId persists
-    * via write-to-temp + rename against ANY Hadoop FS URI (hdfs://,
-    * s3a://, file:/), so the mark lives next to the state it guards on a
-    * shared filesystem — a restarted driver on another host resumes with
-    * the real mark. Rename is atomic on HDFS/POSIX; on object stores
-    * without atomic rename use a store transactional with the sink.
-    */
-  def hadoopHighWaterMark(
-      hconf: org.apache.hadoop.conf.Configuration,
-      path: String): HighWaterMark = new HighWaterMark {
-    private val p = new org.apache.hadoop.fs.Path(path)
-    private def fs = p.getFileSystem(hconf)
-    def get: Long =
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      } else -1L
-    def set(id: Long): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"hwm rename failed: $tmp -> $p")
-    }
-  }
-
   /** Idempotent foreachBatch sink wrapper: Structured Streaming
     * guarantees at-least-once delivery to foreachBatch — after a crash
     * between sink write and checkpoint commit, the SAME batchId is
@@ -193,8 +161,8 @@ object StreamingEmbed {
       start_us: Long, end_us: Long)
 
   /** Streaming sessionization via CUSTOM STATE
-    * (`flatMapGroupsWithState`) — the streaming twin of the batch
-    * `events_sessions` query: 30-min-gap sessions per user, session ids
+    * (`flatMapGroupsWithState`) — a batch sessionization's semantics
+    * on a stream: 30-min-gap sessions per user, session ids
     * numbered 1.. in event-time order, exactly the batch lag+flag-sum
     * semantics. Each micro-batch sorts its slice of a user's events by
     * (ts, event_id) and folds it into the carried state; every session

@@ -4,9 +4,7 @@ package graft.util
   *
   * Every signature scheme in the repo (shingles, minhash, simhash,
   * winnowing, delete-variant blocking, the embedding kernel) builds on
-  * the same two functions; their constants are load-bearing — the DuckDB
-  * oracles replicate them bit-for-bit (e.g. the `fingerprint_stats`
-  * oracle re-implements [[fnv]] in HUGEINT mod-2^64 arithmetic), and any
+  * the same two functions; their constants are load-bearing — any
   * drift between copies would silently desynchronize operators that must
   * agree (index writers vs probers). Keep ONE definition of each.
   */

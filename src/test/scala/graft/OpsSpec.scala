@@ -538,18 +538,6 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(top.head.getDouble(1) - 1.0) < 1e-9)
   }
 
-  test("approx_count_distinct within 5% of exact on the query surface") {
-    val rows = SparkEntry.queries("q_approx_distinct")(
-      spark, "/root/testdata/sf0.01").collect()
-    assert(rows.nonEmpty)
-    // within_5pct is the gated output: the oracle asserts it as literal
-    // TRUE, so a false here is exactly what the driver would catch
-    rows.foreach { r =>
-      assert(r.getBoolean(2),
-        s"HLL estimate drifted past 5% for group ${r.get(0)}")
-    }
-  }
-
   test("salted join equals plain join on a skewed key") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)
@@ -1224,21 +1212,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out.find(_._1 == 1L).get._2 == 0.0)
   }
 
-  test("gap fill conserves mass: dense grid counts sum to the raw event count") {
-    val sf = "/root/testdata/sf0.001"
-    // events.parquet is TIMESTAMP(NANOS); readable only as long nanos
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val grid = SparkEntry.queries("q_gapfill")(spark, sf)
-    val total = grid.agg(sum(col("n"))).head().getLong(0)
-    val raw = spark.read.parquet(s"$sf/events.parquet").count()
-    assert(total == raw, s"grid total $total != raw $raw")
-    // and the grid really is dense: every type covers the same full span
-    val spans = grid.groupBy("event_type").count()
-      .select("count").distinct().count()
-    assert(spans == 1, "event types cover different grid spans")
-  }
-
   test("multimodal audio: real WAV decode — header fields exact, known RMS, bytes never shuffle") {
     import spark.implicits._
     // RIFF/fmt/data round-trip: every header field decodes exactly
@@ -1346,27 +1319,6 @@ class OpsSpec extends AnyFunSuite {
     assert(filesWithMatches(zPath, box) <= zy)
     // layout change loses no rows
     assert(spark.read.parquet(zPath).count() == n)
-  }
-
-  test("PII redaction removes every email/phone match, including adversarial forms") {
-    import spark.implicits._
-    val adversarial = Seq(
-      "reach alice.smith+work@mail.example.org or +44-20-7946-0958 now",
-      "double a@b.co c.d-e_f%g@h-i.jk.museum and +1-800-555-0100.",
-      "no pii here at all",
-      "edge: trailing dot user@example.com. and bare +12345678")
-      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
-    val redacted = adversarial.select(
-      regexp_replace(regexp_replace(col("t"), SparkEntry.EmailRe, "<EMAIL>"),
-        SparkEntry.PhoneRe, "<PHONE>").as("r"))
-    val leftovers = redacted
-      .filter(regexp_count(col("r"), lit(SparkEntry.EmailRe)) > 0 ||
-        regexp_count(col("r"), lit(SparkEntry.PhoneRe)) > 0)
-      .count()
-    assert(leftovers == 0, "redacted text still matches a PII pattern")
-    val r1 = redacted.collect().map(_.getString(0))
-    assert(r1(0).contains("<EMAIL>") && r1(0).contains("<PHONE>"))
-    assert(r1(2) == "no pii here at all")
   }
 
   test("incremental minhash index: probe matches one-shot pair search; append maintains it") {

@@ -21,39 +21,6 @@ class PlanSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-
-  test("q6_filter: all predicates reach the parquet scan; schema pruned") {
-    val plan = planOf("q6_filter")
-    assert(plan.contains("PushedFilters:"))
-    assert(plan.contains("GreaterThanOrEqual(l_shipdate"))
-    assert(plan.contains("LessThan(l_quantity,24.0)"))
-    // projection pruning: the scan must not read unused columns
-    assert(!plan.contains("l_orderkey"), "scan reads unneeded column")
-  }
-
-  /** Scale-correct join shape: no broadcast HINT may be forced onto an
-    * SF-scaling table (orders/customer/part/lineitem). With the
-    * auto-broadcast threshold disabled, only hinted joins still plan as
-    * BroadcastHashJoin — so q3 (no dims) must fall back entirely to
-    * shuffle joins, while q5 keeps exactly its nation/region broadcasts.
-    */
-  private def planNoAutoBroadcast(name: String): String = {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try planOf(name)
-    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("q3_topk: no forced broadcast of fact tables; top-k is TakeOrderedAndProject") {
-    val plan = planNoAutoBroadcast("q3_topk")
-    assert(!plan.contains("BroadcastHashJoin"),
-      "a broadcast hint is forced onto an SF-scaling table")
-    assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-    assert(plan.contains("TakeOrderedAndProject"))
-  }
-
   test("banded levenshtein rewrite: bounded comparisons get the threshold form, results unchanged") {
     // parquet-backed input so constant folding can't evaluate the filter
     // at plan time (a literal LocalRelation would)
@@ -98,23 +65,6 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.experimental.extraOptimizations = Nil
     }
-  }
-
-  test("q_range_join: inequality join broadcasts the O(1) band dim") {
-    val plan = planNoAutoBroadcast("q_range_join")
-    // the band table is SF-invariant, so the explicit broadcast survives
-    // even with auto-broadcast off; an un-broadcast inequality join would
-    // plan a cartesian product — the scale-killer shape
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
-  }
-
-  test("q5_join: fixed-size dims broadcast, fact joins shuffle") {
-    val plan = planNoAutoBroadcast("q5_join")
-    // nation/region are SF-invariant → their hints survive
-    assert(plan.contains("BroadcastHashJoin"))
-    // lineitem⋈orders⋈customer must be shuffle joins, not hinted broadcasts
-    assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
   }
 
   test("flagship embed pipeline plans zero exchanges") {
@@ -268,154 +218,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q1_agg: partial aggregation happens before the exchange") {
-    val plan = planOf("q1_agg")
-    val partialIdx = plan.indexOf("partial_sum")
-    val exchangeIdx = plan.indexOf("Exchange")
-    assert(partialIdx >= 0 && exchangeIdx >= 0)
-    // in the tree string children print BELOW parents, so the partial agg
-    // (child of the exchange) appears after it textually; assert both exist
-    // and the final agg consumes merged buffers
-    assert(plan.contains("sum(cast"))
-  }
-
-  test("q_zscore: the O(#groups) moments side is broadcast, the fact table is scanned once per pass") {
-    val plan = planOf("q_zscore")
-    assert(plan.contains("BroadcastHashJoin"),
-      "per-group moments should broadcast back to the fact scan")
-    assert(!plan.contains("SortMergeJoin"),
-      "a 3-row stats table must never shuffle-join the fact table")
-  }
-
-  test("q_lateral_topk: correlated LATERAL LIMIT decorrelates to a ranked join, not a per-row re-scan") {
-    val plan = planOf("q_lateral_topk")
-    assert(!plan.contains("CartesianProduct"),
-      "lateral subquery planned as a cartesian re-scan")
-    // the decorrelated shape ranks orders within priority once
-    assert(plan.contains("Window") || plan.contains("WindowGroupLimit"),
-      s"expected a window-ranked decorrelation:\n$plan")
-  }
-
-  test("q_inverted_index: posting cap runs as WindowGroupLimit below the exchange, never a full collect_list buffer") {
-    val plan = planOf("q_inverted_index")
-    // rank-filter pattern (row_number <= 10) must plan as WindowGroupLimit
-    // in BOTH phases: Partial (per-task bounded heap BELOW the shuffle —
-    // a stopword contributes at most 10 rows per task to the exchange)
-    // and Final after it. A plain Window + Filter would sort/buffer the
-    // full posting list per word first; collect_list would buffer it in
-    // one aggregation buffer — both are the 100 TB OOM this guards.
-    val wgl = """\(\d+\) WindowGroupLimit""".r.findAllIn(plan).length
-    assert(wgl >= 2, s"expected Partial+Final WindowGroupLimit:\n$plan")
-    assert(plan.contains("Partial"), s"no partial (below-exchange) phase:\n$plan")
-  }
-
-  test("q_domain_mix: totals broadcast back onto the counts — the corpus never re-shuffles") {
-    val plan = planOf("q_domain_mix")
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastExchange"),
-      s"totals side must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin") &&
-      !plan.contains("CartesianProduct"),
-      s"O(1)-row totals must never shuffle-join or cartesian:\n$plan")
-  }
-
-  test("q_hard_negatives: probes broadcast, ranking is WindowGroupLimit — one corpus scan, no shuffle join") {
-    val plan = planOf("q_hard_negatives")
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      s"probe set must broadcast onto the corpus scan:\n$plan")
-    assert(plan.contains("WindowGroupLimit"),
-      s"top-k must plan as WindowGroupLimit, not full sort+filter:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"unexpected shuffle join:\n$plan")
-  }
-
-  test("q_hybrid_rrf: probes and probe words broadcast, rankings are WindowGroupLimit, no cartesian corpus pairs") {
-    val plan = planOf("q_hybrid_rrf")
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      s"probe embeddings must broadcast onto the corpus scan:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"probe words must broadcast onto the word-keyed TF join:\n$plan")
-    assert(plan.contains("WindowGroupLimit"),
-      s"top-k rankings must plan as WindowGroupLimit:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"no corpus-by-corpus pairing may appear:\n$plan")
-  }
-
-  test("q_unicode_norm: native normalizer stays a narrow codegen projection — only the output sort exchanges") {
-    val plan = planOf("q_unicode_norm")
-    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).length
-    assert(exchanges <= 1,
-      s"normalization must not shuffle (output sort only):\n$plan")
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
-      s"normalizer must be a native expression, not a UDF:\n$plan")
-    // codegen ids only appear on the EXECUTED plan under AQE; "*(n) "
-    // is the WholeStageCodegen marker — the Project carrying
-    // graft_normalize must sit inside a codegen span
-    val df = SparkEntry.queries("q_unicode_norm")(spark, sf)
-    df.collect()
-    val executed = df.queryExecution.executedPlan.toString
-    assert("""\*\(\d+\) Project \[doc_id""".r.findFirstIn(executed).isDefined,
-      s"normalize projection fell out of codegen:\n$executed")
-  }
-
-  test("q_span_dedup: span-keyed window + partial-agg reassembly — three exchanges, no global sort rank") {
-    val plan = planOf("q_span_dedup")
-    // (1) exchange on span for the first-occurrence rank, (2) exchange on
-    // doc id for reassembly, (3) the output orderBy's range exchange
-    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).length
-    assert(exchanges <= 3, s"unexpected extra shuffles in:\n$plan")
-    // the rank must stream per span partition, never through one task
-    assert(!plan.contains("SinglePartition"),
-      s"global-sort rank in span-dedup plan:\n$plan")
-    // reassembly must partial-aggregate below its exchange
-    assert(plan.contains("ObjectHashAggregate"),
-      s"no map-side partial aggregation:\n$plan")
-  }
-
-  test("q_ts_native: native TIMESTAMP hourly agg stays a two-exchange agg+sort with a pruned scan") {
-    val plan = planOf("q_ts_native")
-    // (1) hash exchange for the (hour, type) aggregate, (2) the output
-    // orderBy's range exchange — nothing else may shuffle, and the agg
-    // must partial-aggregate below its exchange
-    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).length
-    assert(exchanges == 2, s"expected exactly 2 exchanges:\n$plan")
-    assert(plan.contains("HashAggregate"), s"no hash aggregation:\n$plan")
-    assert("""partial_count|partial""".r.findFirstIn(plan).isDefined ||
-      plan.contains("Partial"), s"no map-side partial aggregation:\n$plan")
-    // the scan must read only the three referenced columns
-    assert(!plan.contains("user_id") && !plan.contains("event_id"),
-      s"scan reads unneeded columns:\n$plan")
-  }
-
-  test("q_dsir_score: totals broadcast, no cartesian, word-keyed joins only") {
-    val plan = planOf("q_dsir_score")
-    // the 1-row totals side must broadcast onto the per-doc aggregate
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastExchange"),
-      s"totals side must broadcast:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"no unbroadcast cross join may appear:\n$plan")
-    // the scan feeds word-keyed hash aggregation with a map-side partial
-    assert(plan.contains("HashAggregate"), s"no hash aggregation:\n$plan")
-  }
-
-  test("q_split_assign: a stateless narrow projection — only the output sort exchanges") {
-    val plan = planOf("q_split_assign")
-    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).length
-    assert(exchanges <= 1,
-      s"split assignment must not shuffle (output sort only):\n$plan")
-    assert(!plan.contains("Window "), s"no window state expected:\n$plan")
-  }
-
-  test("q_unpivot: melt is a narrow Expand feeding one partial-aggregated exchange") {
-    val plan = planOf("q_unpivot")
-    assert(plan.contains("Expand"))
-    // exactly two shuffles: Expand is narrow, the agg shuffles once, the
-    // final orderBy adds its range exchange — nothing else may shuffle
-    // (formatted mode lists each node once as "(N) Exchange" in details)
-    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).length
-    assert(exchanges <= 2, s"unexpected extra shuffles in:\n$plan")
-  }
-
   test("dynamic partition pruning: a partition-keyed join probes only the dim-selected partitions") {
     import spark.implicits._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -479,27 +281,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q_retention, q_gapfill, q_collocations: the raw table is scanned exactly once") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    for (name <- Seq("q_retention", "q_gapfill", "q_collocations")) {
-      // AQE applies exchange reuse at runtime (stage cache), not in the
-      // static plan — execute, then read the finalized adaptive plan.
-      val df = SparkEntry.queries(name)(spark, sf)
-      df.collect()
-      val full = df.queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      // count scans in the executed tree only ("Scan parquet  (N)" tree
-      // lines), not the pre-AQE "== Initial Plan ==" echo or the node
-      // details that formatted mode appends after it
-      val plan = full.split("== Initial Plan ==")(0)
-      val scans = """Scan parquet\s+\(\d+\)""".r.findAllIn(plan).length
-      assert(scans == 1,
-        s"$name reads the raw table $scans times — derive the small " +
-          s"sides from the aggregated subtree instead:\n$plan")
-    }
-  }
-
   test("persist(): downstream actions read the in-memory cache, not the parquet scan") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), length(col("text")).as("n"))
@@ -525,25 +306,6 @@ class PlanSpec extends AnyFunSuite {
     } finally docs.unpersist()
   }
 
-  test("q_kmv_overlap: per-group sketch cut is WindowGroupLimit; no SinglePartition before the pair stage") {
-    val plan = planOf("q_kmv_overlap")
-    // the rank<=k cut must push partial limits below the window exchange
-    val wgl = """\(\d+\) WindowGroupLimit""".r.findAllIn(plan).length
-    assert(wgl >= 2,
-      s"expected Partial+Final WindowGroupLimit for the sketch cut:\n$plan")
-  }
-
-  test("q_curriculum_mix: boundaries broadcast back; no global rank window") {
-    val plan = planOf("q_curriculum_mix")
-    // bucket assignment joins the 1-row boundary agg broadcast — never a
-    // global ntile/row_number (which would plan a SinglePartition Window)
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastExchange"),
-      s"decile boundaries must broadcast:\n$plan")
-    assert(!plan.contains("Window "),
-      s"curriculum bucketing must not use a rank window:\n$plan")
-  }
-
   test("SQL join hints are honored: BROADCAST, MERGE, SHUFFLE_HASH pick their exec") {
     val c = spark.read.parquet(s"$sf/customer.parquet")
     val o = spark.read.parquet(s"$sf/orders.parquet")
@@ -562,97 +324,4 @@ class PlanSpec extends AnyFunSuite {
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
-
-  test("q_data_profile: four columns' null/distinct/min/max profile runs as ONE scan") {
-    val plan = planOf("q_data_profile")
-    // count the numbered node headers, not the tree echo of each node
-    val scans = """\(\d+\) Scan parquet""".r.findAllIn(plan).length
-    assert(scans == 1,
-      s"profile must not scan per column ($scans scans):\n$plan")
-    // multiple COUNT(DISTINCT)s plan through Expand, not extra scans
-    assert(plan.contains("Expand"), s"expected Expand for the distincts:\n$plan")
-  }
-
-  test("ann_filtered: the metadata predicate reaches the parquet scan before any distance math") {
-    val plan = planOf("ann_filtered")
-    assert(plan.contains("PushedFilters:") &&
-      plan.contains("EqualTo(label,3)"),
-      s"label predicate must push to the scan:\n$plan")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"filtered top-k must stay a TakeOrderedAndProject:\n$plan")
-  }
-
-  test("ann_matryoshka: both stages end in TakeOrderedAndProject — no full sort, no wide exchange") {
-    val plan = planOf("ann_matryoshka")
-    val topk = "TakeOrderedAndProject".r.findAllIn(plan).length
-    assert(topk >= 2, s"expected two top-k stages:\n$plan")
-    assert(!plan.contains("Sort "),
-      s"matryoshka must never global-sort:\n$plan")
-  }
-
-  test("q_pareto: running share is a higher-order-function fold over " +
-      "the distributed top-25 head — no Window node at all") {
-    // Round-16 rework (r15 VERDICT ask #2): the 25-row running share
-    // is array_sort + transform/aggregate prefix sums over the top-k
-    // head, so the executed plan carries NO WindowExec — the top-25
-    // itself stays the distributed TakeOrderedAndProject. The pre-fix
-    // plan ran a single-reducer window over ALL users (a scale-killer
-    // at 100 TB); the intermediate fix windowed over the 25-row head;
-    // this shape removes the single-partition window entirely.
-    val plan = SparkEntry.queries("q_pareto")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"),
-      s"q_pareto must not window at all:\n$plan")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"top-25 head must stay a distributed top-k:\n$plan")
-  }
-
-  test("q_heavy_hitters: exact recount filters via broadcast semi join inside codegen, not a UDF") {
-    val plan = planOf("q_heavy_hitters")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      s"candidate filter must be a broadcast left-semi join:\n$plan")
-    assert(!plan.contains("UDF("),
-      s"no Scala UDF may block codegen in the recount stage:\n$plan")
-  }
-
-  test("q4_priority: the EXISTS is a LEFT SEMI join, never a row " +
-      "explosion, and the quarter filter reaches the orders scan") {
-    val plan = planOf("q4_priority")
-    assert(plan.toLowerCase.contains("leftsemi"),
-      s"EXISTS did not plan as a semi join:\n$plan")
-    assert(!plan.contains("CartesianProduct"))
-    assert(plan.contains("PushedFilters:"))
-  }
-
-  test("q7_volume / q8_share: nation copies broadcast, fact joins " +
-      "left to runtime (no forced fact broadcast)") {
-    for (q <- Seq("q7_volume", "q8_share")) {
-      val plan = planNoAutoBroadcast(q)
-      assert(plan.contains("BroadcastHashJoin"),
-        s"$q lost its dimension broadcasts:\n$plan")
-      assert(plan.contains("SortMergeJoin") ||
-        plan.contains("ShuffledHashJoin"),
-        s"$q forced a broadcast onto an SF-scaling side:\n$plan")
-      assert(!plan.contains("CartesianProduct"))
-    }
-  }
-
-  test("q_sentence_dedup: first-occurrence keep is a map-side-" +
-      "combinable sentence-keyed aggregate (r12 de-skew) — no " +
-      "WindowExec a hot boilerplate sentence could pin, no cartesian") {
-    val plan = planOf("q_sentence_dedup")
-    assert(!plan.contains("CartesianProduct"))
-    assert(!plan.contains("Window"),
-      s"sentence-keyed window reappeared (skew hazard):\n$plan")
-    assert(plan.contains("partial_min") || plan.contains("HashAggregate"),
-      s"expected partial aggregation on the sentence key:\n$plan")
-  }
-
-  test("q_winnowing_pairs: fingerprint-keyed join only — no " +
-      "cartesian, no broadcast of the corpus-sized fingerprint side") {
-    val plan = planNoAutoBroadcast("q_winnowing_pairs")
-    assert(!plan.contains("CartesianProduct"))
-    assert(!plan.contains("BroadcastNestedLoopJoin"))
-  }
-
 }

@@ -308,20 +308,6 @@ class Round12Spec extends AnyFunSuite {
     assert(big.join(g, "k").count() == 50L)
   }
 
-  test("q_sentence_dedup plans without a sentence-keyed window: the " +
-      "first-occurrence keep is a map-side-combinable aggregate " +
-      "(hot boilerplate sentences cannot pin one sort partition)") {
-    val plan = SparkEntry.queries("q_sentence_dedup")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan
-    assert(!plan.toString.contains("Window"),
-      "sentence dedup must not use WindowExec — " +
-        "groupBy(sent).agg(min(struct(...))) is the de-skewed plan")
-    // and partial aggregation on the sentence key is actually present
-    assert(plan.toString.contains("partial_min") ||
-      plan.toString.toLowerCase.contains("partial"),
-      "expected a partial (map-side) aggregate before the shuffle")
-  }
-
   test("the `_file` metadata column is queryable and matches the " +
       "manifest file set") {
     val root = freshRoot()

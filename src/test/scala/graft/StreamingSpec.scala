@@ -47,25 +47,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("rate-micro-batch source: the non-file streaming gate matches its closed-form truth") {
-    // q_rate_stream's feed is fully determined by `value` (5 batches ×
-    // 1000 rows), so the expected windowed counts are computable in
-    // plain Scala — the same truth the DuckDB generate_series oracle
-    // replays. Proves the streaming plan runs identically on a
-    // non-file (Kafka-shaped) source: same transform, only offsets
-    // differ.
-    val got = SparkEntry.queries("q_rate_stream")(spark, "unused")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val want = (0L until 5000L)
-      .map { v =>
-        val us = 1704067200000000L + v * 61000000L
-        (us - us % 3600000000L, "t" + (v % 5))
-      }
-      .groupBy(identity).map { case ((w, t), xs) => (w, t, xs.size.toLong) }
-      .toSeq.sortBy(x => (x._1, x._2))
-    assert(got.toSeq == want, s"rate-stream mismatch: got ${got.length} rows, want ${want.length}")
-  }
-
   test("streaming curation: splitAssign + gopherRules on a stream match the batch run exactly") {
     // the curation ops are stateless narrow projections, so their
     // docstring claim — "runs identically over a stream" — must hold
@@ -154,7 +135,7 @@ class StreamingSpec extends AnyFunSuite {
       (user, i.toLong, ts)
     }
     // expected: plain-Scala fold per user in (ts, event_id) order —
-    // the batch events_sessions semantics
+    // the batch sessionization semantics
     val expected = events.groupBy(_._1).flatMap { case (u, evs) =>
       var sess = 0L; var last = Long.MinValue
       var n = 0L; var start = 0L
@@ -501,6 +482,81 @@ class StreamingSpec extends AnyFunSuite {
     assert(total == 4L, s"replay after restart double-counted: $total")
     sink2(batch, 2L) // new batch proceeds
     assert(total == 6L)
+  }
+
+  test("embed stream restarted after a failing batch writes the sink rows of an uninterrupted run") {
+    import spark.implicits._
+    val srcDir = java.nio.file.Files
+      .createTempDirectory("graft_restart_src").toString
+    // three source files, one micro-batch each; the longer documents
+    // span several chunks
+    for (b <- 0 until 3)
+      (0 until 4).map { i =>
+        val id = b * 4L + i
+        id -> (0 to 60 * i)
+          .map(k => s"Document $id sentence $k has a few more words.")
+          .mkString(" ")
+      }.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(srcDir)
+
+    final case class Written(batch: Long, rows: Seq[(Long, Int, Seq[Int])])
+    def run(ckpt: String, hwm: java.nio.file.Path,
+        written: java.util.concurrent.ConcurrentLinkedQueue[Written],
+        failAtBatch1: java.util.concurrent.atomic.AtomicBoolean): Unit = {
+      val stream = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val sink = StreamingEmbed.idempotentSink({ (batch, id) =>
+        if (id == 1L && failAtBatch1.getAndSet(false))
+          throw new IllegalStateException("sink failed at batch 1")
+        written.add(Written(id, batch.collect().toSeq.map { r =>
+          (r.getLong(0), r.getInt(1),
+            r.getSeq[Float](3).map(java.lang.Float.floatToRawIntBits).toList)
+        }))
+      }, StreamingEmbed.fileHighWaterMark(hwm))
+      val q = StreamingEmbed.embedForeachBatch(engine, stream)(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+    def fresh(prefix: String) = {
+      val d = java.nio.file.Files.createTempDirectory(prefix)
+      (d.resolve("ckpt").toString, d.resolve("hwm"),
+        new java.util.concurrent.ConcurrentLinkedQueue[Written]())
+    }
+    def rows(w: java.util.concurrent.ConcurrentLinkedQueue[Written]) = {
+      import scala.jdk.CollectionConverters._
+      w.asScala.toSeq
+    }
+
+    val (ckptA, hwmA, clean) = fresh("graft_restart_clean")
+    run(ckptA, hwmA, clean, new java.util.concurrent.atomic.AtomicBoolean(false))
+
+    val (ckptB, hwmB, restarted) = fresh("graft_restart_fail")
+    val failAtBatch1 = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(ckptB, hwmB, restarted, failAtBatch1)
+    }
+    assert(e.getCause.getMessage.contains("sink failed at batch 1"))
+    assert(rows(restarted).map(_.batch) == Seq(0L))
+    run(ckptB, hwmB, restarted, failAtBatch1) // same checkpoint and mark
+
+    assert(rows(clean).map(_.batch) == Seq(0L, 1L, 2L))
+    assert(rows(restarted).map(_.batch) == Seq(0L, 1L, 2L),
+      "a batch was skipped or written twice")
+    def byChunk(w: Seq[Written]) = {
+      val all = w.flatMap(_.rows)
+      val keyed = all.map(r => (r._1, r._2) -> r._3).toMap
+      assert(keyed.size == all.size, "a chunk was written twice")
+      keyed
+    }
+    val want = byChunk(rows(clean))
+    assert(want.keySet.map(_._1) == (0L until 12L).toSet)
+    assert(want.size > 12, "no document spans several chunks")
+    val got = byChunk(rows(restarted))
+    assert(got.keySet == want.keySet)
+    assert(got.forall { case (k, bits) => bits == want(k) },
+      "a restarted chunk vector differs in its bits")
   }
 
   test("DeltaLog: stream drains to an executor-appended log; upsert read is latest-per-key; replays are no-ops") {
