@@ -4,15 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.config.EngineConfig
-import graft.engine.InceptionEngine
-
 /** Quantile sketches, survival, effect sizes, regression diagnostics, inequality family (round-10 batches 12–31).
   *
-  * Split out of SparkEntry.scala (round 16): members mix into
-  * [[SparkEntry]] and resolve against its full surface via the
-  * self-type; mixin order in SparkEntry preserves the original
-  * declaration (and so val-initialization) order.
+  * Members mix into [[SparkEntry]] and resolve against its helpers
+  * (`tbl`, `fanout`, `rndDet`) via the self-type.
   */
 private[graft] trait SparkEntryStatBatteries { this: SparkEntry.type =>
 

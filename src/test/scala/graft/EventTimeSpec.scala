@@ -4,14 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Schema-adaptive event time (SparkEntry.eventTsUs): the same event
-  * queries must produce IDENTICAL results whether `events.ts` arrives as
-  * a native TIMESTAMP column (current fixtures, every production lake)
-  * or as LongType epoch-nanoseconds (the legacy TIMESTAMP(NANOS) read
-  * under spark.sql.legacy.parquet.nanosAsLong). The r6 fixture
-  * regeneration flipped the encoding and broke 17 queries at analysis —
-  * this spec pins both paths so an encoding flip can never be silent
-  * again.
+/** Schema-adaptive event time (SparkEntry.eventTsUs): an event query
+  * must produce IDENTICAL results whether `events.ts` arrives as a native
+  * TIMESTAMP column (current fixtures, every production lake), as
+  * TIMESTAMP_NTZ, or as LongType epoch-nanoseconds (the legacy
+  * TIMESTAMP(NANOS) read under spark.sql.legacy.parquet.nanosAsLong).
+  * The r6 fixture regeneration flipped the encoding and broke 17 queries
+  * at analysis — this spec pins every path so an encoding flip can never
+  * be silent again. `q_dispersion` is the event query left that reads
+  * `ts` through eventTsUs.
   */
 class EventTimeSpec extends AnyFunSuite {
 
@@ -51,9 +52,7 @@ class EventTimeSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir)
       .collect().map(_.toString).toSeq
 
-  for (q <- Seq("events_tumbling", "events_sessions", "events_hopping",
-    "q_session_window", "q_asof_join", "q_funnel", "q_retention",
-    "q_scd2", "q_gapfill"))
+  for (q <- Seq("q_dispersion"))
     test(s"$q: TIMESTAMP, TIMESTAMP_NTZ and long-ns event encodings produce identical results") {
       val native = run(q, nativeDir)
       val ntz = run(q, ntzDir)
@@ -71,7 +70,7 @@ class EventTimeSpec extends AnyFunSuite {
       .withColumn("ts", lit("not-a-timestamp"))
       .write.parquet(s"$root/bad/events.parquet")
     val e = intercept[Exception] {
-      SparkEntry.queries("events_tumbling")(spark, s"$root/bad").collect()
+      SparkEntry.queries("q_dispersion")(spark, s"$root/bad").collect()
     }
     assert(e.getMessage.contains("unsupported event-time type"),
       s"expected a named encoding error, got: ${e.getMessage}")

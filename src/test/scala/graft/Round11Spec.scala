@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 specs: advice-fix regressions. */
+/** Round-11 specs: the persist-audit contract (no token-instance-level
+  * cache state in any corpus-statistics query plan) and advice-fix
+  * regressions.
+  */
 class Round11Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -17,6 +22,37 @@ class Round11Spec extends AnyFunSuite {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** The §8.x persist-audit rule, checked mechanically: every cache a
+    * query plans over must hold POST-AGGREGATION state (counts/arrays
+    * keyed by vocab, class, or phrase), never the raw exploded token
+    * stream — the shape that is corpus-sized at 100 TB. Each cached
+    * relation's physical plan must therefore end in an aggregate.
+    */
+  test("corpus-statistics caches are aggregates, never raw token rows") {
+    val audited = Seq("q_rake_keywords")
+    audited.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      val cached = df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r
+      }
+      assert(cached.nonEmpty, s"$name: expected at least one cache")
+      cached.foreach { r =>
+        // look through the AQE wrapper: its input plan is not a child
+        def aggCount(p: org.apache.spark.sql.execution.SparkPlan): Int =
+          p.collect {
+            case a: BaseAggregateExec => 1
+            case aqe: org.apache.spark.sql.execution.adaptive
+                .AdaptiveSparkPlanExec => aggCount(aqe.inputPlan)
+          }.sum
+        assert(aggCount(r.cachedPlan) > 0,
+          s"$name caches a non-aggregated relation " +
+            s"(output ${r.output.map(_.name).mkString(",")}) — " +
+            "token-instance-level state, corpus-sized at scale")
+      }
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
 
   test("dHash56 thumbnails the WHOLE image, not the top-left corner, " +
       "and matches resize-to-8x8-then-hash exactly") {

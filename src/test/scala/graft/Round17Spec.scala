@@ -44,7 +44,7 @@ class Round17Spec extends AnyFunSuite {
     }
     // default 128 MB maxPartitionBytes: the tiny fixture estimates a
     // single split, fanout fires its repartition-to-parallelism
-    assert(roundRobins("q_percentile_disc") >= 1,
+    assert(roundRobins("q_breusch_pagan") >= 1,
       "small-estimate input must fire the fanout repartition")
     // a split estimate >= parallelism (the 100 TB shape, simulated by
     // shrinking maxPartitionBytes below fixtureBytes/parallelism)
@@ -53,7 +53,7 @@ class Round17Spec extends AnyFunSuite {
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "1024")
-      assert(roundRobins("q_percentile_disc") == 0,
+      assert(roundRobins("q_breusch_pagan") == 0,
         "large-estimate input must leave the plan repartition-free")
     } finally spark.conf.set(key, prev)
   }
